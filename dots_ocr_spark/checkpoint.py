@@ -35,7 +35,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
@@ -59,6 +59,47 @@ def _lineage_path(base: str) -> str:
 
 def _output_path(base: str) -> str:
     return os.path.join(base, "output")
+
+
+def _bucket(n_buckets: int) -> Column:
+    """The commit-unit rule every runner keys on: ``pmod(xxhash64(doc_id),
+    n_buckets)``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+def _commit_lineage(spark: SparkSession, output_path: str, lineage_path: str,
+                    keys: list[str], group: list[tuple], in_group: Column,
+                    counts: dict[str, Column], run_id: str) -> None:
+    """Append one lineage row per unit of ``group`` (tuples over ``keys``),
+    with ``counts`` re-read from the COMMITTED output — call it only after
+    the group's output write. EVERY unit gets a row: an empty unit writes
+    no output partition, so deriving lineage from written partitions alone
+    would leave it permanently "incomplete" and reprocessed on every
+    resume (never a no-op on sparse inputs). The group domain is
+    left-joined against the written counts, defaulting to zeros."""
+    try:
+        written = (
+            spark.read.parquet(output_path).where(in_group)
+            .groupBy(*keys).agg(*[c.alias(n) for n, c in counts.items()])
+        )
+    except AnalysisException:
+        # an all-empty commit group writes no part files at all, so
+        # parquet schema inference fails (UNABLE_TO_INFER_SCHEMA /
+        # PATH_NOT_FOUND) — every unit gets zeros. Only analysis
+        # errors mean "no output"; IO errors must surface, otherwise
+        # a transient read failure would silently commit zero-count
+        # lineage and mark unprocessed units complete.
+        written = spark.createDataFrame([], ", ".join(
+            [f"{k} int" for k in keys] + [f"{n} long" for n in counts]))
+    domain = spark.createDataFrame(
+        [tuple(int(v) for v in u) for u in group],
+        ", ".join(f"{k} int" for k in keys))
+    domain.join(written, keys, "left").select(
+        *keys,
+        F.lit(run_id).alias("run_id"),
+        *[F.coalesce(n, F.lit(0)).cast("long").alias(n) for n in counts],
+        F.lit(time.time()).alias("completed_at_unix"),
+    ).write.mode("append").parquet(lineage_path)
 
 
 def completed_buckets(spark: SparkSession, base: str) -> set[int]:
@@ -112,9 +153,21 @@ def run_extraction(
     todo = [b for b in range(n_buckets) if b not in done]
 
     if bucket_col is None:
-        bucketed = docs.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        bucketed = docs.withColumn("bucket", _bucket(n_buckets))
+    elif docs.where(~F.coalesce(F.col(bucket_col).between(0, n_buckets - 1),
+                                F.lit(False))).limit(1).count():
+        # Domain guard: commit groups only ever select buckets in
+        # [0, n_buckets), so a doc whose bucket_col lies outside (or is
+        # null) would never be parsed while every group commits clean
+        # lineage. A FINER layout (e.g. pmod(..., 2*n_buckets)) hits
+        # exactly this: its in-range buckets recompute consistently, so
+        # the per-group layout guard below never sees the rest. One
+        # JVM-only job over the partition column, before any commit.
+        raise ValueError(
+            f"bucket_col={bucket_col!r} has values outside "
+            f"[0, {n_buckets}): the input's partition layout disagrees "
+            f"with this run's n_buckets={n_buckets} — refusing to run "
+            "rather than silently skip those docs.")
 
     for lo in range(0, len(todo), buckets_per_commit):
         group = todo[lo:lo + buckets_per_commit]
@@ -131,8 +184,7 @@ def run_extraction(
             # files only (one cheap JVM-only job, no Python work) and
             # refuse to commit on any mismatch.
             stray = chunk.where(
-                ~F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
-                .cast("int").isin(group)).limit(1).count()
+                ~_bucket(n_buckets).isin(group)).limit(1).count()
             if stray:
                 raise ValueError(
                     f"bucket_col={bucket_col!r} does not follow "
@@ -145,56 +197,19 @@ def run_extraction(
         else:
             chunk = bucketed.where(F.col("bucket").isin(group)).drop("bucket")
         out = pipeline.extract(chunk, mode=mode).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+            "bucket", _bucket(n_buckets))
         # 1) output commit: dynamic overwrite replaces exactly these buckets
         out.write.mode("overwrite").partitionBy("bucket") \
             .parquet(_output_path(base))
-        # 2) lineage commit (after the data is durable). EVERY bucket in
-        # the commit group gets a lineage row — an empty bucket writes no
-        # output partition, so deriving lineage from written partitions
-        # alone would leave it permanently "incomplete" and reprocessed on
-        # every resume (never a no-op on sparse inputs). Left-join the
-        # group domain against the written counts, defaulting to zeros.
-        try:
-            counts = (
-                spark.read.parquet(_output_path(base))
-                .where(F.col("bucket").isin(group))
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum("n_spans").cast("long").alias("n_spans"),
-                    F.sum("n_failed").cast("long").alias("n_failed_pages"),
-                    F.sum("n_fallback").cast("long").alias("n_fallback_pages"),
-                )
-            )
-        except AnalysisException:
-            # an all-empty commit group writes no part files at all, so
-            # parquet schema inference fails (UNABLE_TO_INFER_SCHEMA /
-            # PATH_NOT_FOUND) — every bucket gets zeros. Only analysis
-            # errors mean "no output"; IO errors must surface, otherwise
-            # a transient read failure would silently commit zero-count
-            # lineage and mark unprocessed buckets complete.
-            counts = spark.createDataFrame(
-                [], "bucket int, n_docs long, n_spans long, "
-                    "n_failed_pages long, n_fallback_pages long")
-        group_df = spark.createDataFrame(
-            [(int(b),) for b in group], "bucket int")
-        lineage = (
-            group_df.join(counts, "bucket", "left")
-            .select(
-                "bucket",
-                F.lit(run_id).alias("run_id"),
-                F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-                F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-                F.coalesce("n_failed_pages", F.lit(0)).cast("long")
-                .alias("n_failed_pages"),
-                F.coalesce("n_fallback_pages", F.lit(0)).cast("long")
-                .alias("n_fallback_pages"),
-                F.lit(time.time()).alias("completed_at_unix"),
-            )
-        )
-        lineage.write.mode("append").parquet(_lineage_path(base))
+        # 2) lineage commit, after the data is durable
+        _commit_lineage(
+            spark, _output_path(base), _lineage_path(base), ["bucket"],
+            [(b,) for b in group], F.col("bucket").isin(group),
+            {"n_docs": F.count("*"),
+             "n_spans": F.sum("n_spans"),
+             "n_failed_pages": F.sum("n_failed"),
+             "n_fallback_pages": F.sum("n_fallback")},
+            run_id)
 
     return {
         "run_id": run_id,
@@ -269,9 +284,7 @@ def completed_page_units(spark: SparkSession, base: str) -> set[tuple[int, int]]
 def _page_grain(docs: DataFrame, n_buckets: int, pages_per_range: int) -> DataFrame:
     """Explode the input to page grain with the (bucket, prange) unit key."""
     return (
-        docs.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
+        docs.withColumn("bucket", _bucket(n_buckets))
         .select("doc_id", "bucket", F.explode("pages").alias("page"))
         .select("doc_id", "bucket", "page.*")
         .withColumn(
@@ -287,7 +300,6 @@ def run_extraction_paged(
     n_buckets: int = 64,
     pages_per_range: int = 8,
     units_per_commit: int = 16,
-    shuffle_pages: bool = True,
     run_id: str | None = None,
 ) -> dict:
     """Run (or resume) a page-granular checkpointed parse over ``docs``.
@@ -309,19 +321,16 @@ def run_extraction_paged(
     # i.e. pages silently dropped with no resumable trace.
     dom = (
         docs.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-            .alias("bucket"),
-            F.when(
-                F.size("pages") > 0,
-                F.floor(F.array_max("pages.page_no") / F.lit(pages_per_range))
-                .cast("int") + 1,
-            ).otherwise(F.lit(0)).alias("npr"),
-            F.when(
-                F.size("pages") > 0, F.array_min("pages.page_no")
-            ).otherwise(F.lit(0)).alias("min_pno"),
+            _bucket(n_buckets).alias("bucket"),
+            F.coalesce(F.size("pages"), F.lit(0)).alias("n_pages"),
+            # null for a page-less doc, which the guard below refuses
+            (F.floor(F.array_max("pages.page_no") / F.lit(pages_per_range))
+             .cast("int") + 1).alias("npr"),
+            F.array_min("pages.page_no").alias("min_pno"),
         )
         .groupBy("bucket")
-        .agg(F.max("npr").alias("npr"), F.min("min_pno").alias("min_pno"))
+        .agg(F.max("npr").alias("npr"), F.min("min_pno").alias("min_pno"),
+             F.min("n_pages").alias("min_pages"))
         .collect()
     )
     # array_max covers 1-based/gapped numbering UPWARD, but a negative
@@ -338,6 +347,16 @@ def run_extraction_paged(
             "would fall outside the (bucket, prange) unit domain and be "
             "silently skipped. Renumber pages to be >= 0 before the "
             "paged runner.")
+    # A document without pages owns no (bucket, prange) unit, so it
+    # never reaches the page table and assembly would drop it while the
+    # lineage stays clean. Refuse it from the same collect; the bucket
+    # runner (``run_extraction``) emits such documents (n_pages=0).
+    empty = sorted(r["bucket"] for r in dom if r["min_pages"] == 0)
+    if empty:
+        raise ValueError(
+            f"document(s) without pages in bucket(s) {empty}: the paged "
+            "runner checkpoints pages, so they would be silently missing "
+            "from its output. Use run_extraction for such inputs.")
     all_units = {(r["bucket"], p) for r in dom for p in range(r["npr"])}
     done = completed_page_units(spark, base) & all_units
     todo = sorted(all_units - done)
@@ -347,52 +366,22 @@ def run_extraction_paged(
 
     for lo in range(0, len(todo), units_per_commit):
         group = todo[lo:lo + units_per_commit]
-        sel = pages.where(
-            unit_key.isin([b * _PR_ENC + p for b, p in group]))
+        in_group = unit_key.isin([b * _PR_ENC + p for b, p in group])
         parsed = pipeline.parse_pages_exploded(
-            sel.drop("bucket", "prange"), shuffle_pages=shuffle_pages)
-        out = parsed.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"),
-        ).withColumn(
+            pages.where(in_group).drop("bucket", "prange"))
+        out = parsed.withColumn("bucket", _bucket(n_buckets)).withColumn(
             "prange",
             F.floor(F.col("page_no") / F.lit(pages_per_range)).cast("int"))
         out.write.mode("overwrite").partitionBy("bucket", "prange") \
             .parquet(_pages_path(base))
-
-        try:
-            counts = (
-                spark.read.parquet(_pages_path(base))
-                .where(unit_key.isin([b * _PR_ENC + p for b, p in group]))
-                .groupBy("bucket", "prange")
-                .agg(
-                    F.count("*").alias("n_pages"),
-                    F.sum((F.col("status") == "failed").cast("long"))
-                    .alias("n_failed_pages"),
-                    F.sum((F.col("status") == "fallback").cast("long"))
-                    .alias("n_fallback_pages"),
-                )
-            )
-        except AnalysisException:
-            counts = spark.createDataFrame(
-                [], "bucket int, prange int, n_pages long, "
-                    "n_failed_pages long, n_fallback_pages long")
-        group_df = spark.createDataFrame(
-            [(int(b), int(p)) for b, p in group], "bucket int, prange int")
-        lineage = (
-            group_df.join(counts, ["bucket", "prange"], "left")
-            .select(
-                "bucket", "prange",
-                F.lit(run_id).alias("run_id"),
-                F.coalesce("n_pages", F.lit(0)).cast("long").alias("n_pages"),
-                F.coalesce("n_failed_pages", F.lit(0)).cast("long")
-                .alias("n_failed_pages"),
-                F.coalesce("n_fallback_pages", F.lit(0)).cast("long")
-                .alias("n_fallback_pages"),
-                F.lit(time.time()).alias("completed_at_unix"),
-            )
-        )
-        lineage.write.mode("append").parquet(_page_lineage_path(base))
+        _commit_lineage(
+            spark, _pages_path(base), _page_lineage_path(base),
+            ["bucket", "prange"], group, in_group,
+            {"n_pages": F.count("*"),
+             "n_failed_pages": F.sum((F.col("status") == "failed").cast("long")),
+             "n_fallback_pages":
+                 F.sum((F.col("status") == "fallback").cast("long"))},
+            run_id)
 
     return {
         "run_id": run_id,

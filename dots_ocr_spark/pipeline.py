@@ -1,7 +1,7 @@
 """The Spark extraction job: interleaved document table in, ordered span
 table out.
 
-Three physical strategies, all span-sequence-equal to the oracle
+Two physical strategies, both span-sequence-equal to the oracle
 (tests/test_golden_e2e.py parametrizes the mode):
 
   * ``extract_fused`` (default, mode='fused') — document grain, ZERO
@@ -12,10 +12,6 @@ Three physical strategies, all span-sequence-equal to the oracle
     sizing (``spark.sql.files.maxPartitionBytes``): documents are ~KBs,
     so every split holds thousands of docs and per-doc skew averages
     out. Measured 0.875 scaling efficiency N→4N (BENCH/BASELINE.md).
-  * ``extract_paged`` (mode='paged') — page grain, ONE shuffle (hash by
-    doc_id + sortWithinPartitions); the UDF reassembles documents with a
-    group-carry across Arrow batches. For inputs that arrive at page
-    grain.
   * ``extract_scatter`` (mode='scatter') — page-scatter repartition by
     ``hash(doc_id, page_no)`` + JVM reassembly
     (``array_sort(collect_list(...))`` + higher-order functions). TWO
@@ -38,14 +34,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
+from .spec.assemble import TASK_FAIL_THRESHOLD, assemble_page_results
 from .spec.page import process_page
 
-TASK_FAIL_THRESHOLD = 0.1
+
+def _page_result(doc_id: str, p) -> dict:
+    """One PAGE-shaped mapping through the shared spec rules: the
+    row → ``process_page`` decode both UDFs below share."""
+    toc_json = p["toc_json"]
+    words_json = p.get("words_json")
+    sf = p["scale_factor"]
+    return process_page(
+        p["payload"], int(p["width"]), int(p["height"]),
+        doc_id=doc_id, page_no=int(p["page_no"]),
+        scale_factor=float(sf) if sf is not None else 1.0,
+        toc=None if toc_json is None else json.loads(toc_json),
+        words=None if words_json is None else json.loads(words_json),
+    )
 
 
 # --------------------------------------------------------------------------
 # stage 1 — page parse (the only Python stage)
 # --------------------------------------------------------------------------
+
+_PARSED_COLS = tuple(f.name for f in schemas.PARSED_PAGE.fields)
+
 
 def _parse_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: page rows in, parsed page rows out.
@@ -55,67 +68,48 @@ def _parse_pages_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     here amortized over a whole Arrow batch per Python call.
     """
     for pdf in batches:
-        doc_ids = pdf["doc_id"].tolist()
-        page_nos = pdf["page_no"].tolist()
-        widths = pdf["width"].tolist()
-        heights = pdf["height"].tolist()
-        scales = pdf["scale_factor"].tolist()
-        payloads = pdf["payload"].tolist()
-        tocs = pdf["toc_json"].tolist()
-        words_col = (pdf["words_json"].tolist() if "words_json" in pdf.columns
-                     else [None] * len(doc_ids))
-
-        out = {k: [] for k in
-               ("doc_id", "page_no", "status", "md", "md_nohf", "spans", "n_cells")}
-        for doc_id, page_no, w, h, sf, payload, toc_json, words_json in zip(
-                doc_ids, page_nos, widths, heights, scales, payloads, tocs,
-                words_col):
-            toc = None if toc_json is None else json.loads(toc_json)
-            words = None if words_json is None else json.loads(words_json)
-            r = process_page(
-                payload, int(w), int(h), doc_id=doc_id, page_no=int(page_no),
-                scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                words=words,
-            )
-            out["doc_id"].append(doc_id)
-            out["page_no"].append(int(page_no))
-            out["status"].append(r["status"])
-            out["md"].append(r["md"])
-            out["md_nohf"].append(r["md_nohf"])
-            out["spans"].append(
-                [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]]
-            )
-            out["n_cells"].append(len(r["cells"]))
-        yield pd.DataFrame(out)
+        out: list[tuple] = []
+        for p in pdf.to_dict("records"):
+            doc_id = p["doc_id"]
+            if pd.isna(p["page_no"]):
+                # explode_outer row of a document without pages: passed on
+                # as an all-null page so stage 2 still emits the document
+                out.append((doc_id,) + (None,) * (len(_PARSED_COLS) - 1))
+                continue
+            r = _page_result(doc_id, p)
+            out.append((
+                doc_id, int(p["page_no"]), r["status"], r["md"], r["md_nohf"],
+                [(s["kind"], s["text"], s["media_ref"]) for s in r["spans"]],
+                len(r["cells"]),
+            ))
+        yield pd.DataFrame(out, columns=_PARSED_COLS)
 
 
-def parse_pages(docs: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def parse_pages(docs: DataFrame) -> DataFrame:
     """Stage 1: explode documents to page grain and run the parse UDF.
-
-    ``shuffle_pages=True`` adds the skew-breaking repartition by
-    ``hash(doc_id, page_no)``; leave it on for real runs, off for tiny
-    unit-test inputs where the extra shuffle dominates.
-    """
+    ``explode_outer`` keeps a document with no pages as one null-page
+    row, so stage 2 emits it (``n_pages=0``) as the oracle does."""
     pages = docs.select(
-        "doc_id", F.explode("pages").alias("page")
+        "doc_id", F.explode_outer("pages").alias("page")
     ).select("doc_id", "page.*")
-    return parse_pages_exploded(pages, shuffle_pages=shuffle_pages)
+    return parse_pages_exploded(pages)
 
 
-def parse_pages_exploded(pages: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def parse_pages_exploded(pages: DataFrame) -> DataFrame:
     """Parse an already page-grain frame (doc_id + the PAGE columns) —
     the seam shared by ``parse_pages`` and the page-granular checkpoint
-    runner (``checkpoint.run_extraction_paged``)."""
-    if shuffle_pages:
-        # Explicit partition count: an expression-only repartition is an
-        # AQE-coalescible exchange, and page batches are small enough
-        # (~8 MB) that AQE's 64 MB advisory size would collapse the Python
-        # stage to a handful of tasks — starving the executors where the
-        # work actually is. The count pins parallelism; pages stay
-        # scattered by hash so table/formula-heavy docs can't clump (X7).
-        n_part = pages.sparkSession.sparkContext.defaultParallelism * 4
-        pages = pages.repartition(n_part, F.xxhash64("doc_id", "page_no"))
-    return pages.mapInPandas(_parse_pages_batches, schema=schemas.PARSED_PAGE)
+    runner (``checkpoint.run_extraction_paged``).
+
+    Pages are scattered by ``hash(doc_id, page_no)`` so table/formula-heavy
+    docs can't clump (X7). The partition count is explicit: an
+    expression-only repartition is an AQE-coalescible exchange, and page
+    batches are small enough (~8 MB) that AQE's 64 MB advisory size would
+    collapse the Python stage to a handful of tasks — starving the
+    executors where the work actually is.
+    """
+    n_part = pages.sparkSession.sparkContext.defaultParallelism * 4
+    return pages.repartition(n_part, F.xxhash64("doc_id", "page_no")) \
+        .mapInPandas(_parse_pages_batches, schema=schemas.PARSED_PAGE)
 
 
 # --------------------------------------------------------------------------
@@ -130,9 +124,11 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
     trailing ``\\n\\n`` per page; document failed when failed/total > 0.1.
     """
     grouped = parsed.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("page_no", "status", "md", "md_nohf", "spans"))
-        ).alias("pr")
+        F.array_sort(F.collect_list(
+            # a null-page row (document without pages) adds no page
+            F.when(F.col("page_no").isNotNull(),
+                   F.struct("page_no", "status", "md", "md_nohf", "spans"))
+        )).alias("pr")
     )
 
     ok = F.filter("pr", lambda p: p["status"] != F.lit("failed"))
@@ -170,8 +166,11 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
         "n_failed",
         "n_fallback",
         F.size(spans).alias("n_spans"),
+        # try_divide: a document without pages has 0/0 failed pages and
+        # is "ok", like the oracle's ``n_pages and ...`` guard
         F.when(
-            F.col("n_failed") / F.col("n_pages") > TASK_FAIL_THRESHOLD, F.lit("failed")
+            F.try_divide(F.col("n_failed"), F.col("n_pages")) > TASK_FAIL_THRESHOLD,
+            F.lit("failed"),
         ).otherwise(F.lit("ok")).alias("status"),
     )
 
@@ -180,43 +179,29 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
 # fused parse+assemble, document grain (default path — ZERO shuffles)
 # --------------------------------------------------------------------------
 
-_OUT_COLS = ("doc_id", "spans", "markdown", "markdown_nohf",
-             "n_pages", "n_failed", "n_fallback", "n_spans", "status")
-
-
-def _out_row(d: dict) -> tuple:
-    return (
-        d["doc_id"],
-        [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in d["spans"]],
-        d["markdown"], d["markdown_nohf"],
-        d["n_pages"], d["n_failed"], d["n_fallback"], d["n_spans"], d["status"],
-    )
+_OUT_COLS = tuple(f.name for f in schemas.OUTPUT.fields)
 
 
 def _extract_doc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker, document grain: each input row carries the whole
     document (nested ``pages`` array), so parse + assembly complete inside
     the task — no shuffle anywhere in the job."""
-    from .spec.assemble import assemble_page_results
-
     for pdf in batches:
         out: list[tuple] = []
         for doc_id, pages in zip(pdf["doc_id"].tolist(), pdf["pages"].tolist()):
-            page_results = []
-            for p in sorted(pages if pages is not None else [],
-                            key=lambda p: p["page_no"]):
-                toc_json = p["toc_json"]
-                toc = None if toc_json is None else json.loads(toc_json)
-                words_json = p.get("words_json")
-                words = None if words_json is None else json.loads(words_json)
-                sf = p["scale_factor"]
-                page_results.append(process_page(
-                    p["payload"], int(p["width"]), int(p["height"]),
-                    doc_id=doc_id, page_no=int(p["page_no"]),
-                    scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                    words=words,
-                ))
-            out.append(_out_row(assemble_page_results(doc_id, page_results)))
+            page_results = [
+                _page_result(doc_id, p)
+                for p in sorted(pages if pages is not None else [],
+                                key=lambda p: p["page_no"])
+            ]
+            d = assemble_page_results(doc_id, page_results)
+            out.append((
+                doc_id,
+                [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                 for s in d["spans"]],
+                d["markdown"], d["markdown_nohf"], d["n_pages"], d["n_failed"],
+                d["n_fallback"], d["n_spans"], d["status"],
+            ))
         yield pd.DataFrame(out, columns=_OUT_COLS)
 
 
@@ -230,111 +215,35 @@ def extract_fused(docs: DataFrame) -> DataFrame:
     (``spark.sql.files.maxPartitionBytes``; docs are ~KBs, so every split
     holds thousands of documents and skew averages out). Per-task skew is
     bounded by the largest single document; for corpora with pathological
-    page counts per doc, use ``extract_paged``/``extract_scatter`` which
-    redistribute at page grain.
+    page counts per doc, use ``extract_scatter``, which redistributes at
+    page grain.
     """
     return docs.select("doc_id", "pages").mapInPandas(
         _extract_doc_batches, schema=schemas.OUTPUT)
 
 
-# --------------------------------------------------------------------------
-# fused parse+assemble, page grain (one shuffle — for page-grain inputs)
-# --------------------------------------------------------------------------
-
-def _parse_assemble_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for the page-grain fused path.
-
-    Rows arrive hash-partitioned by ``doc_id`` and sorted by
-    ``(doc_id, page_no)`` within the partition, so all pages of a document
-    are contiguous. Arrow batch boundaries do NOT align with documents, so
-    the open group is carried across batches and the final group flushed
-    at iterator exhaustion.
-    """
-    from .spec.assemble import assemble_page_results
-
-    cols, _row = _OUT_COLS, _out_row
-
-    cur_id: str | None = None
-    cur_results: list[dict] = []
-    for pdf in batches:
-        out: list[tuple] = []
-        words_col = (pdf["words_json"].tolist() if "words_json" in pdf.columns
-                     else [None] * len(pdf))
-        for doc_id, page_no, w, h, sf, payload, toc_json, words_json in zip(
-                pdf["doc_id"].tolist(), pdf["page_no"].tolist(),
-                pdf["width"].tolist(), pdf["height"].tolist(),
-                pdf["scale_factor"].tolist(), pdf["payload"].tolist(),
-                pdf["toc_json"].tolist(), words_col):
-            if doc_id != cur_id:
-                if cur_id is not None:
-                    out.append(_row(assemble_page_results(cur_id, cur_results)))
-                cur_id, cur_results = doc_id, []
-            if payload is None:  # explode_outer row: document with no pages
-                continue
-            toc = None if toc_json is None else json.loads(toc_json)
-            words = None if words_json is None else json.loads(words_json)
-            cur_results.append(process_page(
-                payload, int(w), int(h), doc_id=doc_id, page_no=int(page_no),
-                scale_factor=float(sf) if sf is not None else 1.0, toc=toc,
-                words=words,
-            ))
-        if out:
-            yield pd.DataFrame(out, columns=cols)
-    if cur_id is not None:
-        yield pd.DataFrame([_row(assemble_page_results(cur_id, cur_results))],
-                           columns=cols)
-
-
-def extract_paged(docs: DataFrame) -> DataFrame:
-    """Fused parse+assemble over PAGE-grain distribution: exactly ONE
-    shuffle (hash by ``doc_id``) and ONE Python stage.
-
-    Use when the input arrives at page grain (e.g. a page-stream ingest)
-    or when nested per-doc rows would be too large: pages are exploded,
-    co-located by ``doc_id`` via ``repartition`` +
-    ``sortWithinPartitions(doc_id, page_no)``, and the UDF reassembles
-    documents with a group-carry across Arrow batches. For doc-grain
-    inputs prefer ``extract_fused`` (zero shuffles)."""
-    n_part = docs.sparkSession.sparkContext.defaultParallelism * 4
-    pages = docs.select(
-        "doc_id", F.explode_outer("pages").alias("page")
-    ).select("doc_id", "page.*")
-    pages = pages.repartition(n_part, "doc_id").sortWithinPartitions("doc_id", "page_no")
-    return pages.mapInPandas(_parse_assemble_batches, schema=schemas.OUTPUT)
-
-
-def extract_scatter(docs: DataFrame, shuffle_pages: bool = True) -> DataFrame:
+def extract_scatter(docs: DataFrame) -> DataFrame:
     """Two-stage pipeline: page-scatter parse + JVM document reassembly.
     Use when single documents are so large that one document per task
     would straggle (page-grain parallelism is preserved here)."""
-    return assemble_documents(parse_pages(docs, shuffle_pages=shuffle_pages))
+    return assemble_documents(parse_pages(docs))
 
 
-def extract(docs: DataFrame, shuffle_pages: bool = True,
-            mode: str = "fused") -> DataFrame:
+#: mode name → physical strategy (see the module docstring)
+MODES = {"fused": extract_fused, "scatter": extract_scatter}
+
+
+def extract(docs: DataFrame, mode: str = "fused") -> DataFrame:
     """Full pipeline: input table → (doc_id, ordered spans, markdown, …).
 
-    mode: 'fused' (doc-grain, zero shuffles — default), 'paged' (page
-    grain, one shuffle), 'scatter' (page scatter + JVM reassembly, two
-    shuffles — giant-doc corpora)."""
-    if mode == "fused":
-        return extract_fused(docs)
-    if mode == "paged":
-        return extract_paged(docs)
-    return extract_scatter(docs, shuffle_pages=shuffle_pages)
-
-
-# --------------------------------------------------------------------------
-# metrics (A4/A5 analog)
-# --------------------------------------------------------------------------
-
-def page_metrics(parsed: DataFrame) -> DataFrame:
-    """Per-status page counters — the reference's task stats
-    (app/utils/executor/stats.py:22-41) as a groupBy."""
-    return parsed.groupBy("status").agg(
-        F.count("*").alias("n_pages"),
-        F.sum("n_cells").alias("n_cells"),
-    )
+    mode: 'fused' (doc-grain, zero shuffles — default) or 'scatter' (page
+    scatter + JVM reassembly, two shuffles — giant-doc corpora). Any
+    other value raises ``ValueError``, so a typo cannot silently pick a
+    different plan."""
+    if mode not in MODES:
+        raise ValueError(
+            f"unknown extraction mode {mode!r}; expected one of {sorted(MODES)}")
+    return MODES[mode](docs)
 
 
 # --------------------------------------------------------------------------

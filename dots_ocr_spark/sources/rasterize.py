@@ -23,7 +23,7 @@ Reference behavior mirrored (NOT code-copied — the analog is
 Spark shape: one PDF (binary column) in → one row PER PAGE out via an
 Arrow-batched ``mapInPandas`` — the same fused, zero-shuffle grain as
 the extraction pipeline; a giant PDF's pages land in one task, which is
-exactly the skew the paged/scatter machinery downstream already
+exactly the skew the scatter / page-checkpoint machinery downstream already
 handles (pipeline.extract_scatter, checkpoint.run_extraction_paged).
 
 Real backends, import-gated exactly like ``textops._decode_real``:

@@ -31,6 +31,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
+    from dots_ocr_spark import checkpoint, pipeline
+
     ap = argparse.ArgumentParser()
     src = ap.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="parquet dir of the interleaved doc table")
@@ -39,7 +41,7 @@ def main() -> int:
     ap.add_argument("--output", required=True, help="run base dir (output + lineage)")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--buckets-per-commit", type=int, default=None)
-    ap.add_argument("--mode", choices=["fused", "paged", "scatter"], default=None)
+    ap.add_argument("--mode", choices=sorted(pipeline.MODES), default=None)
     ap.add_argument("--page-checkpoint", action="store_true",
                     help="checkpoint at (bucket, page-range) grain instead "
                          "of bucket grain: a crash mid-giant-document "
@@ -81,7 +83,6 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    from dots_ocr_spark import checkpoint, pipeline
     from dots_ocr_spark.tracing import Tracer
 
     tracer = Tracer(spark)

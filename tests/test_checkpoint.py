@@ -230,3 +230,64 @@ def test_bucket_col_layout_mismatch_fails_fast(spark, docs, tmp_path):
             buckets_per_commit=4, run_id="mislaid", bucket_col="bucket")
     # no lineage was committed for the mismatched layout
     assert checkpoint.completed_buckets(spark, base) == set()
+
+
+def test_bucket_col_finer_layout_fails_fast(spark, docs, tmp_path):
+    """The converse of the coarser layout above: an input laid out with
+    2 x n_buckets recomputes consistently inside [0, n_buckets), so no
+    commit group sees a stray doc, while every doc with bucket >=
+    n_buckets is never selected at all. The runner must refuse the
+    out-of-domain partition values before committing anything."""
+    src = str(tmp_path / "finer_src")
+    docs.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("doc_id"), F.lit(2 * N_BUCKETS)).cast("int"),
+    ).write.partitionBy("bucket").parquet(src)
+
+    base = str(tmp_path / "finer")
+    with pytest.raises(ValueError, match="outside"):
+        checkpoint.run_extraction(
+            spark, spark.read.parquet(src), base, n_buckets=N_BUCKETS,
+            buckets_per_commit=4, run_id="finer", bucket_col="bucket")
+    assert checkpoint.completed_buckets(spark, base) == set()
+
+
+def test_unknown_mode_fails_loudly(spark, docs, tmp_path):
+    """A mode other than fused/scatter (a typo, or the removed 'paged')
+    must raise instead of silently running a different plan — both in
+    pipeline.extract and in the checkpointed runner, before any commit."""
+    for mode in ("paged", "Fused", ""):
+        with pytest.raises(ValueError, match="unknown extraction mode"):
+            pipeline.extract(docs, mode=mode)
+    base = str(tmp_path / "badmode")
+    with pytest.raises(ValueError, match="unknown extraction mode"):
+        checkpoint.run_extraction(
+            spark, docs, base, n_buckets=N_BUCKETS, mode="paged")
+    assert checkpoint.completed_buckets(spark, base) == set()
+
+
+def test_job_cli_rejects_removed_mode(tmp_path, monkeypatch, capsys):
+    """`--mode paged` is an argparse error, raised before any
+    SparkSession starts."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql import SparkSession
+
+    path = Path(__file__).resolve().parents[1] / "jobs" / "run_extract.py"
+    spec = importlib.util.spec_from_file_location("run_extract_cli", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    def no_session(self):
+        raise AssertionError("SparkSession started before argument checks")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    monkeypatch.setattr(sys, "argv", [
+        "run_extract.py", "--synthetic", "3", "--output", str(tmp_path),
+        "--mode", "paged"])
+    with pytest.raises(SystemExit) as exc:
+        job.main()
+    assert exc.value.code == 2
+    assert "invalid choice: 'paged'" in capsys.readouterr().err

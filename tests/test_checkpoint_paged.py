@@ -253,3 +253,26 @@ def test_negative_page_no_fails_fast(spark, tmp_path):
             pages_per_range=PAGES_PER_RANGE, units_per_commit=8, run_id="neg")
     # nothing committed: a later corrected run starts from scratch
     assert checkpoint.completed_page_units(spark, base) == set()
+
+
+def test_page_less_doc_fails_fast(spark, tmp_path):
+    """A document without pages owns no (bucket, prange) unit: it would
+    never reach the page table, and assembly would drop it behind clean
+    lineage. The runner must refuse it from its domain collect."""
+    base_doc = generate_doc(6, max_pages=2, malformed_frac=0.0)
+    rows = [
+        ("full-0", [],
+         [(p["page_no"], p["width"], p["height"], p["scale_factor"],
+           p["payload"], p["toc_json"], p["words_json"])
+          for p in base_doc["pages"]],
+         len(base_doc["pages"]), "normal"),
+        ("empty-0", [], [], 0, "empty"),
+    ]
+    docs = spark.createDataFrame(rows, schemas.INPUT)
+    base = str(tmp_path / "empty")
+    with pytest.raises(ValueError, match="without pages"):
+        checkpoint.run_extraction_paged(
+            spark, docs, base, n_buckets=N_BUCKETS,
+            pages_per_range=PAGES_PER_RANGE, units_per_commit=8,
+            run_id="empty")
+    assert checkpoint.completed_page_units(spark, base) == set()

@@ -184,12 +184,12 @@ def test_wordgrain_tall_doc_keeps_every_word(spark, tmp_path):
     assert got == text  # every word recovered through the clip
 
 
-@pytest.mark.parametrize("mode", ["paged", "scatter"])
+@pytest.mark.parametrize("mode", ["scatter"])
 @pytest.mark.parametrize(
     "gen", [interleaved_multipage, interleaved_rich, interleaved_toc,
             interleaved_twocol, interleaved_wordgrain])
 def test_generated_input_modes_agree(spark, mode, gen):
-    """All three physical strategies must produce identical documents on
+    """Both physical strategies must produce identical documents on
     the generated inputs (fused is the baseline) — including the
     word-grain shape, whose words_json must survive every plumbing."""
     docs = gen(spark.read.parquet(f"{SF}/documents.parquet").limit(120))
