@@ -12,7 +12,9 @@ families, checkpoint metrics, ingest gates, and the relational suite);
 see dots_ocr_spark/queries.py. The grading driver records the first 50
 in registry order; the three entries past that cap are physical-plan /
 same-output variants whose oracles are value-checked through in-record
-siblings (contract pinned by tests/test_registry.py).
+siblings (contract pinned by tests/test_registry.py). Both dicts come
+from one ordered list, ``queries.REGISTRY``, of ``(name, query,
+oracle_sql)`` triples.
 """
 
 from __future__ import annotations
@@ -35,5 +37,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query."""
+    """DuckDB-equivalent SQL for every query."""
     return dict(Q.ORACLE_SQL)

@@ -101,7 +101,11 @@ def main() -> None:
     # are value-checked by the correctness gate at sf0.01 but excluded
     # here: their candidate volume is a property of the tiny synthetic
     # corpus's similarity structure, not of engine speed.
-    names = [n for n in HEADLINE if n in qs]
+    # A HEADLINE name missing from the registry (e.g. a renamed query)
+    # must fail, not quietly shrink the suite total.
+    missing = [n for n in HEADLINE if n not in qs]
+    if missing:
+        raise SystemExit(f"HEADLINE names not in the registry: {missing}")
 
     # Warmup: initialize Python workers / Arrow / codegen on every core so
     # timings measure steady-state throughput, not JVM+worker cold start.
@@ -143,7 +147,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     contended: list[str] = []
-    for name in names:
+    for name in HEADLINE:
         best = float("inf")
         runs = 0
         while runs < 4:

@@ -9,9 +9,11 @@ parquet tables (views: region nation customer supplier part orders
 lineitem events documents embeddings). Every computed column is aliased
 identically on both sides; aggregates over doubles are routed through
 DECIMAL so both engines produce bit-identical values regardless of
-summation order. Queries without an oracle entry are non-SQL-expressible
-(the extraction pipeline itself) and are golden-tested against the
-plain-Python oracle in pytest instead.
+summation order.
+
+Both dicts are built from one ordered list, :data:`REGISTRY`, of
+``(name, query, oracle_sql)`` triples, so every query carries its oracle
+by construction.
 """
 
 from __future__ import annotations
@@ -41,6 +43,10 @@ from .sources.ingest import (
 )
 
 
+#: a registered query: ``(spark, sf_dir) -> DataFrame``
+Query = Callable[[SparkSession, str], DataFrame]
+
+
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
@@ -48,6 +54,28 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # extraction pipeline (north-star; value-oracled end to end)
 # ---------------------------------------------------------------------------
+
+def _span_rows(out: DataFrame, *doc_cols: str, media: bool = False) -> DataFrame:
+    """One row per ordered span of the extraction output ``out``:
+    ``doc_id, offset, kind, content_md5``, then ``<col>_md5`` for each
+    document-level column in ``doc_cols``. ``content_md5`` hashes the span
+    text; with ``media`` it hashes the text, else the media ref, else ''."""
+    content = F.col("s.text")
+    if media:
+        content = F.coalesce(content, F.col("s.media_ref"), F.lit(""))
+    md5s = [f"{c}_md5" for c in doc_cols]
+    return out.select(
+        "doc_id",
+        F.explode("spans").alias("s"),
+        *(F.md5(c).alias(m) for c, m in zip(doc_cols, md5s)),
+    ).select(
+        "doc_id",
+        F.col("s.offset").cast("long").alias("offset"),
+        F.col("s.kind").alias("kind"),
+        F.md5(content).alias("content_md5"),
+        *md5s,
+    )
+
 
 def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the documents corpus ingested as MULTI-PAGE interleaved
@@ -58,15 +86,7 @@ def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-deterministic, so the driver's DuckDB oracle value-checks the
     END-TO-END pipeline including the repair and failure paths."""
     docs = interleaved_multipage(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.coalesce(F.col("s.text"), F.col("s.media_ref"), F.lit(""))).alias("content_md5"),
-    )
+    return _span_rows(pipeline.extract(docs), media=True)
 
 
 def q_extract_spans_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,15 +97,7 @@ def q_extract_spans_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result (the pytest mode-agreement gate, independently
     value-checked)."""
     docs = interleaved_multipage(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs, mode="scatter")
-    return out.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.coalesce(F.col("s.text"), F.col("s.media_ref"), F.lit(""))).alias("content_md5"),
-    )
+    return _span_rows(pipeline.extract(docs, mode="scatter"), media=True)
 
 
 def q_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -106,14 +118,14 @@ def q_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mp_base_ctes() -> str:
-    """Shared DuckDB CTEs mirroring ``interleaved_multipage``: chunking,
-    pagination, and the md5 page-status / picture draws. Every constant is
-    read from the ingest module so the two sides cannot drift."""
-    cw = ingest.MP_CHUNK_WORDS
-    cpp = ingest.MP_CHUNKS_PER_PAGE
-    x1, y1, x2, y2 = ingest.MP_PIC_BBOX
-    return f"""
+def _chunk_ctes(cw: int = ingest.MP_CHUNK_WORDS,
+                cpp: int | None = ingest.MP_CHUNKS_PER_PAGE) -> str:
+    """DuckDB CTEs mirroring ``ingest.chunk_words`` and pagination: ``t``
+    (the split words), ``c`` (``n_chunks`` and the ``cw``-word
+    ``chunks``) and, unless ``cpp`` is None, ``pg``: one row per page with
+    ``n_pages``, ``page_no`` and that page's ``cpp``-chunk slice
+    ``pchunks``. Pass the ingest constants so the two sides cannot drift."""
+    ctes = f"""
 t AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,
          string_split(text, ' ') AS toks,
@@ -125,15 +137,61 @@ t AS (
          [array_to_string(toks[(i*{cw}+1):least((i+1)*{cw}, n)], ' ')
           FOR i IN range(0, CAST(ceil(n / {cw}.0) AS INT))] AS chunks
   FROM t
-), pg AS (
-  SELECT doc_id, n_chunks,
-         CAST(ceil(n_chunks / {cpp}.0) AS INT) AS n_pages,
-         unnest(range(0, CAST(ceil(n_chunks / {cpp}.0) AS INT))) AS page_no,
-         chunks
-  FROM c
-), ps AS (
+)"""
+    if cpp is None:
+        return ctes
+    return ctes + f""", pg AS (
   SELECT doc_id, n_pages, page_no,
-         chunks[(page_no*{cpp}+1):least((page_no+1)*{cpp}, n_chunks)] AS pchunks,
+         chunks[(page_no*{cpp}+1):least((page_no+1)*{cpp}, n_chunks)] AS pchunks
+  FROM (SELECT doc_id, n_chunks, chunks,
+               CAST(ceil(n_chunks / {cpp}.0) AS INT) AS n_pages,
+               unnest(range(0, CAST(ceil(n_chunks / {cpp}.0) AS INT))) AS page_no
+        FROM c)
+)"""
+
+
+def _span_tail(*doc_cols: str) -> str:
+    """The shared end of a span oracle, after a ``pspans`` CTE holding each
+    page's ordered ``spans`` list of ``{kind, content}``: unnest the
+    spans, number them per document in (page, position) order, and hash
+    the content. Each of ``doc_cols`` is taken from a ``docmd`` CTE keyed
+    by ``doc_id``, which the caller defines when it names any."""
+    cols = "".join(f",\n       dm.{c} AS {c}" for c in doc_cols)
+    join = " JOIN docmd dm ON e.doc_id = dm.doc_id" if doc_cols else ""
+    return f"""ex AS (
+  SELECT doc_id, page_no,
+         unnest([{{'j': j, 's': spans[j]}} FOR j IN range(1, len(spans)+1)]) AS u
+  FROM pspans
+)
+SELECT e.doc_id,
+       CAST(row_number() OVER (PARTITION BY e.doc_id ORDER BY e.page_no, e.u.j) - 1
+            AS BIGINT) AS "offset",
+       e.u.s.kind AS kind,
+       md5(e.u.s.content) AS content_md5{cols}
+FROM ex e{join}
+"""
+
+
+#: ``docmd`` CTE for pages whose markdown is their span contents joined
+#: by blank lines: the md5 of the concatenated per-page markdown.
+_DOCMD = """docmd AS (
+  SELECT doc_id,
+         md5(string_agg(
+           array_to_string([s.content FOR s IN spans], chr(10)||chr(10))
+             || chr(10)||chr(10),
+           '' ORDER BY page_no)) AS markdown_md5
+  FROM pspans GROUP BY doc_id
+)"""
+
+
+def _mp_base_ctes() -> str:
+    """Shared DuckDB CTEs mirroring ``interleaved_multipage``: chunking and
+    pagination (:func:`_chunk_ctes`), then ``ps`` with the md5 page-status
+    / picture draws. Every constant is read from the ingest module so the
+    two sides cannot drift."""
+    x1, y1, x2, y2 = ingest.MP_PIC_BBOX
+    return f"""{_chunk_ctes()}, ps AS (
+  SELECT doc_id, n_pages, page_no, pchunks,
          CASE
            WHEN CAST(('0x' || substring(md5(doc_id || ':st:' || page_no), 1, 2)) AS INT)
                 < {ingest.MP_FAILED_BELOW} THEN 'failed'
@@ -166,18 +224,7 @@ pspans AS (
                      ELSE []::STRUCT(kind VARCHAR, content VARCHAR)[] END)
          END AS spans
   FROM ps
-), ex AS (
-  SELECT doc_id, page_no,
-         unnest([{{'j': j, 's': spans[j]}} FOR j IN range(1, len(spans)+1)]) AS u
-  FROM pspans
-)
-SELECT doc_id,
-       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page_no, u.j) - 1
-            AS BIGINT) AS "offset",
-       u.s.kind AS kind,
-       md5(u.s.content) AS content_md5
-FROM ex
-"""
+), {_span_tail()}"""
 
 
 ORACLE_EXTRACT_DOCS = f"""
@@ -224,44 +271,15 @@ def q_extract_cleaner_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback) is disabled — the same external-oracle trick as the F5
     IoU probe in ``extract_rich``."""
     docs = interleaved_cleaner_probe(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.coalesce(F.col("s.text"), F.col("s.media_ref"), F.lit("")))
-        .alias("content_md5"),
-    )
+    return _span_rows(pipeline.extract(docs), media=True)
 
 
 _CP_NL = "chr(10)||chr(10)"
 
 ORACLE_EXTRACT_CLEANER_PROBE = f"""
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT) AS n_chunks,
-         [array_to_string(toks[(i*{ingest.MP_CHUNK_WORDS}+1):least(
-              (i+1)*{ingest.MP_CHUNK_WORDS}, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT))]
-           AS chunks
-  FROM t
-), pg AS (
-  SELECT doc_id, n_chunks,
-         unnest(range(0, CAST(ceil(
-             n_chunks / {ingest.MP_CHUNKS_PER_PAGE}.0) AS INT))) AS page_no,
-         chunks
-  FROM c
-), ps AS (
-  SELECT doc_id, page_no,
-         chunks[(page_no*{ingest.MP_CHUNKS_PER_PAGE}+1):least(
-             (page_no+1)*{ingest.MP_CHUNKS_PER_PAGE}, n_chunks)] AS pchunks,
+WITH {_chunk_ctes()},
+ps AS (
+  SELECT doc_id, page_no, pchunks,
          CAST(('0x' || substring(md5(doc_id || ':cp:' || page_no), 1, 1))
               AS INT) AS cls,
          substring(md5(doc_id || ':cc:' || page_no), 1, 8) AS cc8,
@@ -271,7 +289,7 @@ WITH t AS (
   FROM pg
 ), pspans AS (
   SELECT doc_id, page_no,
-         CASE
+         [{{'kind': 'text', 'content': ct}} FOR ct IN CASE
            WHEN cls < {ingest.CP_DUP_BELOW} THEN
              [array_to_string(pchunks, {_CP_NL})
               || {_CP_NL} || 'cc-' || cc8
@@ -282,21 +300,9 @@ WITH t AS (
            WHEN cls < {ingest.CP_SALVAGE_BELOW} THEN
              ['salv-' || sv8 || ']']
            ELSE pchunks
-         END AS contents
+         END] AS spans
   FROM ps
-), ex AS (
-  SELECT doc_id, page_no,
-         unnest([{{'j': j, 'ct': contents[j]}}
-                 FOR j IN range(1, len(contents)+1)]) AS u
-  FROM pspans
-)
-SELECT doc_id,
-       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY page_no, u.j) - 1
-            AS BIGINT) AS "offset",
-       'text' AS kind,
-       md5(u.ct) AS content_md5
-FROM ex
-"""
+), {_span_tail()}"""
 
 
 def q_extract_from_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,19 +323,8 @@ def q_extract_from_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mirrors sources/ingest.py chunking (CHUNK_WORDS=40) + render/assembly:
 # each 40-word chunk is one Text span; page markdown joins chunks with
 # blank lines; document markdown appends a trailing blank line.
-ORACLE_EXTRACT_CORPUS = """
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(ceil(n / 40.0) AS INT) AS n_chunks,
-         [array_to_string(toks[(i*40+1):least((i+1)*40, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / 40.0) AS INT))] AS chunks
-  FROM t
-)
+ORACLE_EXTRACT_CORPUS = f"""
+WITH {_chunk_ctes(ingest.CHUNK_WORDS, None)}
 SELECT doc_id, 1 AS n_pages, CAST(n_chunks AS INT) AS n_spans, 'ok' AS status,
        md5(array_to_string(chunks, chr(10)||chr(10)) || chr(10)||chr(10))
          AS markdown_md5
@@ -345,44 +340,18 @@ def q_extract_wordgrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     per block, fully inside its cell, so the recovered text equals the
     chunk text and DuckDB predicts every span and the markdown."""
     docs = interleaved_wordgrain(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-        F.md5("markdown").alias("markdown_md5"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.col("s.text")).alias("content_md5"),
-        "markdown_md5",
-    )
+    return _span_rows(pipeline.extract(docs), "markdown")
 
 
+# single-page docs: every chunk is one Text span on page 0
 ORACLE_EXTRACT_WORDGRAIN = f"""
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         [array_to_string(toks[(i*{ingest.MP_CHUNK_WORDS}+1):least((i+1)*{ingest.MP_CHUNK_WORDS}, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT))] AS chunks
-  FROM t
-), ex AS (
-  SELECT doc_id, chunks,
-         unnest([{{'j': j, 'ch': chunks[j]}} FOR j IN range(1, len(chunks)+1)]) AS u
+WITH {_chunk_ctes(cpp=None)},
+pspans AS (
+  SELECT doc_id, 0 AS page_no,
+         [{{'kind': 'text', 'content': ch}} FOR ch IN chunks] AS spans
   FROM c
-)
-SELECT doc_id,
-       CAST(u.j - 1 AS BIGINT) AS "offset",
-       'text' AS kind,
-       md5(u.ch) AS content_md5,
-       md5(array_to_string(chunks, chr(10)||chr(10)) || chr(10)||chr(10))
-         AS markdown_md5
-FROM ex
-"""
+), {_DOCMD},
+{_span_tail("markdown_md5")}"""
 
 
 def q_extract_wordgrain_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,18 +363,7 @@ def q_extract_wordgrain_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``extract_wordgrain`` (a wrong or missing division would clip zero
     words and hash-mismatch)."""
     docs = interleaved_wordgrain(_read(spark, sf_dir, "documents"), scale=2)
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-        F.md5("markdown").alias("markdown_md5"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.col("s.text")).alias("content_md5"),
-        "markdown_md5",
-    )
+    return _span_rows(pipeline.extract(docs), "markdown")
 
 
 def q_extract_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,39 +378,13 @@ def q_extract_toc(spark: SparkSession, sf_dir: str) -> DataFrame:
     markdown SQL-predictable (reference directory_entry.py:100-122,
     180-215)."""
     docs = interleaved_toc(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-        F.md5("markdown").alias("markdown_md5"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.col("s.text")).alias("content_md5"),
-        "markdown_md5",
-    )
+    return _span_rows(pipeline.extract(docs), "markdown")
 
 
 ORACLE_EXTRACT_TOC = f"""
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT) AS n_chunks,
-         [array_to_string(toks[(i*{ingest.MP_CHUNK_WORDS}+1):least((i+1)*{ingest.MP_CHUNK_WORDS}, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT))] AS chunks
-  FROM t
-), pg AS (
-  SELECT doc_id, n_chunks, chunks,
-         unnest(range(0, CAST(ceil(n_chunks / {ingest.MP_CHUNKS_PER_PAGE}.0) AS INT))) AS page_no
-  FROM c
-), psc AS (
-  SELECT doc_id, page_no,
-         chunks[(page_no*{ingest.MP_CHUNKS_PER_PAGE}+1):least((page_no+1)*{ingest.MP_CHUNKS_PER_PAGE}, n_chunks)] AS pchunks,
+WITH {_chunk_ctes()},
+psc AS (
+  SELECT doc_id, page_no, pchunks,
          'sec ' || substring(md5(doc_id || ':hd:' || page_no), 1, 8) AS hd,
          'li ' || substring(md5(doc_id || ':li:' || page_no), 1, 8) AS li,
          CAST(('0x' || substring(md5(doc_id || ':toc:' || page_no), 1, 1)) AS INT) AS d
@@ -474,26 +406,8 @@ WITH t AS (
            [{{'kind': 'text', 'content': ch}} FOR ch IN pchunks]),
            [{{'kind': 'list-item', 'content': li}}]) AS spans
   FROM hs
-), docmd AS (
-  SELECT doc_id,
-         md5(string_agg(
-           array_to_string([s.content FOR s IN spans], chr(10)||chr(10))
-             || chr(10)||chr(10),
-           '' ORDER BY page_no)) AS markdown_md5
-  FROM pspans GROUP BY doc_id
-), ex AS (
-  SELECT doc_id, page_no,
-         unnest([{{'j': j, 's': spans[j]}} FOR j IN range(1, len(spans)+1)]) AS u
-  FROM pspans
-)
-SELECT e.doc_id,
-       CAST(row_number() OVER (PARTITION BY e.doc_id ORDER BY e.page_no, e.u.j) - 1
-            AS BIGINT) AS "offset",
-       e.u.s.kind AS kind,
-       md5(e.u.s.content) AS content_md5,
-       dm.markdown_md5 AS markdown_md5
-FROM ex e JOIN docmd dm ON e.doc_id = dm.doc_id
-"""
+), {_DOCMD},
+{_span_tail("markdown_md5")}"""
 
 
 def q_extract_twocol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,41 +421,13 @@ def q_extract_twocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference layout_service.py:187-235, format_transformer.py:164-165).
     """
     docs = interleaved_twocol(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-        F.md5("markdown").alias("markdown_md5"),
-        F.md5("markdown_nohf").alias("markdown_nohf_md5"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.col("s.text")).alias("content_md5"),
-        "markdown_md5",
-        "markdown_nohf_md5",
-    )
+    return _span_rows(pipeline.extract(docs), "markdown", "markdown_nohf")
 
 
 ORACLE_EXTRACT_TWOCOL = f"""
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT) AS n_chunks,
-         [array_to_string(toks[(i*{ingest.MP_CHUNK_WORDS}+1):least((i+1)*{ingest.MP_CHUNK_WORDS}, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT))] AS chunks
-  FROM t
-), pg AS (
-  SELECT doc_id, n_chunks, chunks,
-         unnest(range(0, CAST(ceil(n_chunks / {ingest.TC_CHUNKS_PER_PAGE}.0) AS INT))) AS page_no
-  FROM c
-), psc AS (
-  SELECT doc_id, page_no,
-         chunks[(page_no*{ingest.TC_CHUNKS_PER_PAGE}+1):least((page_no+1)*{ingest.TC_CHUNKS_PER_PAGE}, n_chunks)] AS pchunks,
+WITH {_chunk_ctes(cpp=ingest.TC_CHUNKS_PER_PAGE)},
+psc AS (
+  SELECT doc_id, page_no, pchunks,
          'hd ' || substring(md5(doc_id || ':ph:' || page_no), 1, 8) AS hd,
          'ft ' || substring(md5(doc_id || ':pf:' || page_no), 1, 8) AS ft
   FROM pg
@@ -571,20 +457,7 @@ WITH t AS (
          md5(string_agg(pmd_nohf, '' ORDER BY page_no))
            AS markdown_nohf_md5
   FROM pspans GROUP BY doc_id
-), ex AS (
-  SELECT doc_id, page_no,
-         unnest([{{'j': j, 's': spans[j]}} FOR j IN range(1, len(spans)+1)]) AS u
-  FROM pspans
-)
-SELECT e.doc_id,
-       CAST(row_number() OVER (PARTITION BY e.doc_id ORDER BY e.page_no, e.u.j) - 1
-            AS BIGINT) AS "offset",
-       e.u.s.kind AS kind,
-       md5(e.u.s.content) AS content_md5,
-       dm.markdown_md5 AS markdown_md5,
-       dm.markdown_nohf_md5 AS markdown_nohf_md5
-FROM ex e JOIN docmd dm ON e.doc_id = dm.doc_id
-"""
+), {_span_tail("markdown_md5", "markdown_nohf_md5")}"""
 
 
 def q_extract_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -595,39 +468,13 @@ def q_extract_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sources.ingest.interleaved_rich``; reference
     format_transformer.py:65-115, prompts.py:9-13)."""
     docs = interleaved_rich(_read(spark, sf_dir, "documents"))
-    out = pipeline.extract(docs)
-    return out.select(
-        "doc_id",
-        F.explode("spans").alias("s"),
-        F.md5("markdown").alias("markdown_md5"),
-    ).select(
-        "doc_id",
-        F.col("s.offset").cast("long").alias("offset"),
-        F.col("s.kind").alias("kind"),
-        F.md5(F.col("s.text")).alias("content_md5"),
-        "markdown_md5",
-    )
+    return _span_rows(pipeline.extract(docs), "markdown")
 
 
 ORACLE_EXTRACT_RICH = f"""
-WITH t AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-), c AS (
-  SELECT doc_id,
-         CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT) AS n_chunks,
-         [array_to_string(toks[(i*{ingest.MP_CHUNK_WORDS}+1):least((i+1)*{ingest.MP_CHUNK_WORDS}, n)], ' ')
-          FOR i IN range(0, CAST(ceil(n / {ingest.MP_CHUNK_WORDS}.0) AS INT))] AS chunks
-  FROM t
-), pg AS (
-  SELECT doc_id, n_chunks, chunks,
-         unnest(range(0, CAST(ceil(n_chunks / {ingest.MP_CHUNKS_PER_PAGE}.0) AS INT))) AS page_no
-  FROM c
-), psc AS (
-  SELECT doc_id, page_no,
-         chunks[(page_no*{ingest.MP_CHUNKS_PER_PAGE}+1):least((page_no+1)*{ingest.MP_CHUNKS_PER_PAGE}, n_chunks)] AS pchunks,
+WITH {_chunk_ctes()},
+psc AS (
+  SELECT doc_id, page_no, pchunks,
          CAST(('0x' || substring(md5(doc_id || ':fb:' || page_no), 1, 1)) AS INT) % 4 AS fd,
          substring(md5(doc_id || ':fm:' || page_no), 1, 4) AS fh,
          substring(md5(doc_id || ':tb:' || page_no), 1, 4) AS tb,
@@ -655,26 +502,8 @@ WITH t AS (
            ])
            AS spans
   FROM psc
-), docmd AS (
-  SELECT doc_id,
-         md5(string_agg(
-           array_to_string([s.content FOR s IN spans], chr(10)||chr(10))
-             || chr(10)||chr(10),
-           '' ORDER BY page_no)) AS markdown_md5
-  FROM pspans GROUP BY doc_id
-), ex AS (
-  SELECT doc_id, page_no,
-         unnest([{{'j': j, 's': spans[j]}} FOR j IN range(1, len(spans)+1)]) AS u
-  FROM pspans
-)
-SELECT e.doc_id,
-       CAST(row_number() OVER (PARTITION BY e.doc_id ORDER BY e.page_no, e.u.j) - 1
-            AS BIGINT) AS "offset",
-       e.u.s.kind AS kind,
-       md5(e.u.s.content) AS content_md5,
-       dm.markdown_md5 AS markdown_md5
-FROM ex e JOIN docmd dm ON e.doc_id = dm.doc_id
-"""
+), {_DOCMD},
+{_span_tail("markdown_md5")}"""
 
 
 def q_crop_merge_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1860,122 +1689,90 @@ ORACLE_TRAINING_CORPUS = ORACLE_TRAINING_CORPUS.format(
 #: sibling, so the oracle itself stays value-checked, and (b) have its
 #: byte-identical-output equivalence to that sibling pinned in pytest.
 #: tests/test_registry.py enforces all of this.
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "extract_spans": q_extract_spans,
-    "extract_docs": q_extract_docs,
-    "extract_cleaner_probe": q_extract_cleaner_probe,
-    "extract_from_corpus": q_extract_from_corpus,
-    "extract_wordgrain": q_extract_wordgrain,
-    "extract_toc": q_extract_toc,
-    "extract_twocol": q_extract_twocol,
-    "extract_rich": q_extract_rich,
-    "metrics_summary": q_metrics_summary,
-    "ingest_gate": q_ingest_gate,
-    "crop_merge_extents": q_crop_merge_extents,
-    "token_stats": q_token_stats,
-    "token_stats_bpe": q_token_stats_bpe,
-    "fingerprint": q_fingerprint,
-    "winnow_fingerprints": q_winnow_fingerprints,
-    "langid": q_langid,
-    "quality_score": q_quality_score,
-    "quality_repetition": q_quality_repetition,
-    "training_corpus": q_training_corpus,
-    "dedup_exact": q_dedup_exact,
-    "minhash_signature": q_minhash_signature,
-    "minhash_band_buckets": D.minhash_band_buckets,
-    "minhash_band_buckets_word": q_minhash_band_buckets_word,
-    "simhash": D.simhash_signatures,
-    "simhash_band_buckets": D.simhash_band_buckets,
-    "simhash_neardup_pairs": D.simhash_neardup_pairs,
-    "jaccard_pairs": D.jaccard_pairs,
-    "dedup_survivors": D.dedup_survivors,
-    "dedup_survivors_cc": D.dedup_survivors_cc,
-    "neardup_components": D.neardup_components,
-    "embed_topk": S.embed_topk,
-    "embed_ann_buckets": S.embed_ann_buckets,
-    "embed_neardup_pairs": S.embed_neardup_pairs,
-    "ivf_assign": S.ivf_assign,
-    "ivf_topk": S.ivf_topk,
-    "corpus_stats": TX.corpus_stats,
-    "media_decode": TX.media_decode,
-    "html_main_content": H.html_main_content,
-    "html_outlinks": H.html_outlinks,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "top_orders": q_top_orders,
-    "top_orders_per_cust": q_top_orders_per_cust,
-    "customers_without_orders": q_customers_without_orders,
-    "event_value_rollup": q_event_value_rollup,
-    "asof_click_before_error": q_asof_click_before_error,
-    "pivot_status": q_pivot_status,
-    "cube_order_stats": q_cube_order_stats,
-    "buyers_with_events": q_buyers_with_events,
-    "sessionize": q_sessionize,
+REGISTRY: list[tuple[str, Query, str]] = [
+    ("extract_spans", q_extract_spans, ORACLE_EXTRACT_SPANS),
+    ("extract_docs", q_extract_docs, ORACLE_EXTRACT_DOCS),
+    ("extract_cleaner_probe", q_extract_cleaner_probe, ORACLE_EXTRACT_CLEANER_PROBE),
+    ("extract_from_corpus", q_extract_from_corpus, ORACLE_EXTRACT_CORPUS),
+    ("extract_wordgrain", q_extract_wordgrain, ORACLE_EXTRACT_WORDGRAIN),
+    ("extract_toc", q_extract_toc, ORACLE_EXTRACT_TOC),
+    ("extract_twocol", q_extract_twocol, ORACLE_EXTRACT_TWOCOL),
+    ("extract_rich", q_extract_rich, ORACLE_EXTRACT_RICH),
+    ("metrics_summary", q_metrics_summary, ORACLE_METRICS_SUMMARY),
+    ("ingest_gate", q_ingest_gate, ORACLE_INGEST_GATE),
+    ("crop_merge_extents", q_crop_merge_extents, ORACLE_CROP_MERGE),
+    ("token_stats", q_token_stats, ORACLE_TOKEN_STATS),
+    ("token_stats_bpe", q_token_stats_bpe, ORACLE_TOKEN_STATS_BPE),
+    ("fingerprint", q_fingerprint, ORACLE_FINGERPRINT),
+    ("winnow_fingerprints", q_winnow_fingerprints, ORACLE_WINNOW),
+    ("langid", q_langid, ORACLE_LANGID),
+    ("quality_score", q_quality_score, ORACLE_QUALITY),
+    ("quality_repetition", q_quality_repetition, ORACLE_QUALITY_REPETITION),
+    ("training_corpus", q_training_corpus, ORACLE_TRAINING_CORPUS),
+    ("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT),
+    ("minhash_signature", q_minhash_signature, ORACLE_MINHASH),
+    ("minhash_band_buckets", D.minhash_band_buckets, D.ORACLE_MINHASH_SHINGLE_BANDS),
+    ("minhash_band_buckets_word", q_minhash_band_buckets_word, ORACLE_MINHASH_BANDS),
+    ("simhash", D.simhash_signatures, D.ORACLE_SIMHASH),
+    ("simhash_band_buckets", D.simhash_band_buckets, D.ORACLE_SIMHASH_BANDS),
+    ("simhash_neardup_pairs", D.simhash_neardup_pairs, D.ORACLE_SIMHASH_NEARDUP),
+    ("jaccard_pairs", D.jaccard_pairs, D.ORACLE_JACCARD_PAIRS),
+    ("dedup_survivors", D.dedup_survivors, D.ORACLE_DEDUP_SURVIVORS),
+    ("dedup_survivors_cc", D.dedup_survivors_cc, D.ORACLE_DEDUP_SURVIVORS_CC),
+    ("neardup_components", D.neardup_components, D.ORACLE_NEARDUP_COMPONENTS),
+    ("embed_topk", S.embed_topk, S.ORACLE_EMBED_TOPK),
+    ("embed_ann_buckets", S.embed_ann_buckets, S.ORACLE_EMBED_ANN_BUCKETS),
+    ("embed_neardup_pairs", S.embed_neardup_pairs, S.ORACLE_EMBED_NEARDUP),
+    ("ivf_assign", S.ivf_assign, S.ORACLE_IVF_ASSIGN),
+    ("ivf_topk", S.ivf_topk, S.ORACLE_IVF_TOPK),
+    ("corpus_stats", TX.corpus_stats, TX.ORACLE_CORPUS_STATS),
+    ("media_decode", TX.media_decode, TX.ORACLE_MEDIA_DECODE),
+    ("html_main_content", H.html_main_content, H.ORACLE_HTML_MAIN_CONTENT),
+    ("html_outlinks", H.html_outlinks, H.ORACLE_HTML_OUTLINKS),
+    ("pricing_summary", q_pricing_summary, ORACLE_PRICING),
+    ("revenue_by_nation", q_revenue_by_nation, ORACLE_REVENUE_NATION),
+    ("top_orders", q_top_orders, ORACLE_TOP_ORDERS),
+    ("top_orders_per_cust", q_top_orders_per_cust, ORACLE_TOP_PER_CUST),
+    ("customers_without_orders", q_customers_without_orders, ORACLE_CUST_NO_ORDERS),
+    ("event_value_rollup", q_event_value_rollup, ORACLE_EVENT_ROLLUP),
+    ("asof_click_before_error", q_asof_click_before_error, ORACLE_ASOF),
+    ("pivot_status", q_pivot_status, ORACLE_PIVOT),
+    ("cube_order_stats", q_cube_order_stats, ORACLE_CUBE),
+    ("buyers_with_events", q_buyers_with_events, ORACLE_SET_OPS),
+    ("sessionize", q_sessionize, ORACLE_SESSIONIZE),
     # ---- tail (may fall past the driver's 50-row record cap): ----
     # physical-plan variants, byte-identical to their in-record sibling
     # (scatter == fused pinned by tests/test_golden_e2e.py 3-mode
     # equality; exploded-winnow == fused-winnow by the shared oracle in
     # tests + plan gate), oracles shared with the sibling rows above
-    "extract_spans_scatter": q_extract_spans_scatter,
-    "winnow_fingerprints_exploded": q_winnow_fingerprints_exploded,
+    ("extract_spans_scatter", q_extract_spans_scatter, ORACLE_EXTRACT_SPANS),
+    ("winnow_fingerprints_exploded", q_winnow_fingerprints_exploded, ORACLE_WINNOW),
     # P4 scale-division delta vs extract_wordgrain is golden-pinned
     # (tests/test_geometry.py, tests/test_words_clip.py); identical
     # output, same oracle string
-    "extract_wordgrain_scaled": q_extract_wordgrain_scaled,
-}
+    ("extract_wordgrain_scaled", q_extract_wordgrain_scaled, ORACLE_EXTRACT_WORDGRAIN),
+]
 
-ORACLE_SQL: dict[str, str] = {
-    "extract_spans": ORACLE_EXTRACT_SPANS,
-    "extract_spans_scatter": ORACLE_EXTRACT_SPANS,
-    "extract_docs": ORACLE_EXTRACT_DOCS,
-    "extract_cleaner_probe": ORACLE_EXTRACT_CLEANER_PROBE,
-    "extract_from_corpus": ORACLE_EXTRACT_CORPUS,
-    "extract_wordgrain": ORACLE_EXTRACT_WORDGRAIN,
-    "extract_wordgrain_scaled": ORACLE_EXTRACT_WORDGRAIN,
-    "extract_toc": ORACLE_EXTRACT_TOC,
-    "extract_twocol": ORACLE_EXTRACT_TWOCOL,
-    "extract_rich": ORACLE_EXTRACT_RICH,
-    "metrics_summary": ORACLE_METRICS_SUMMARY,
-    "ingest_gate": ORACLE_INGEST_GATE,
-    "crop_merge_extents": ORACLE_CROP_MERGE,
-    "token_stats": ORACLE_TOKEN_STATS,
-    "token_stats_bpe": ORACLE_TOKEN_STATS_BPE,
-    "fingerprint": ORACLE_FINGERPRINT,
-    "winnow_fingerprints": ORACLE_WINNOW,
-    "winnow_fingerprints_exploded": ORACLE_WINNOW,
-    "langid": ORACLE_LANGID,
-    "quality_score": ORACLE_QUALITY,
-    "quality_repetition": ORACLE_QUALITY_REPETITION,
-    "training_corpus": ORACLE_TRAINING_CORPUS,
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "minhash_signature": ORACLE_MINHASH,
-    "minhash_band_buckets": D.ORACLE_MINHASH_SHINGLE_BANDS,
-    "minhash_band_buckets_word": ORACLE_MINHASH_BANDS,
-    "simhash": D.ORACLE_SIMHASH,
-    "simhash_band_buckets": D.ORACLE_SIMHASH_BANDS,
-    "simhash_neardup_pairs": D.ORACLE_SIMHASH_NEARDUP,
-    "jaccard_pairs": D.ORACLE_JACCARD_PAIRS,
-    "dedup_survivors": D.ORACLE_DEDUP_SURVIVORS,
-    "dedup_survivors_cc": D.ORACLE_DEDUP_SURVIVORS_CC,
-    "neardup_components": D.ORACLE_NEARDUP_COMPONENTS,
-    "embed_topk": S.ORACLE_EMBED_TOPK,
-    "embed_ann_buckets": S.ORACLE_EMBED_ANN_BUCKETS,
-    "embed_neardup_pairs": S.ORACLE_EMBED_NEARDUP,
-    "ivf_assign": S.ORACLE_IVF_ASSIGN,
-    "ivf_topk": S.ORACLE_IVF_TOPK,
-    "corpus_stats": TX.ORACLE_CORPUS_STATS,
-    "media_decode": TX.ORACLE_MEDIA_DECODE,
-    "html_main_content": H.ORACLE_HTML_MAIN_CONTENT,
-    "html_outlinks": H.ORACLE_HTML_OUTLINKS,
-    "pricing_summary": ORACLE_PRICING,
-    "revenue_by_nation": ORACLE_REVENUE_NATION,
-    "top_orders": ORACLE_TOP_ORDERS,
-    "top_orders_per_cust": ORACLE_TOP_PER_CUST,
-    "customers_without_orders": ORACLE_CUST_NO_ORDERS,
-    "event_value_rollup": ORACLE_EVENT_ROLLUP,
-    "asof_click_before_error": ORACLE_ASOF,
-    "pivot_status": ORACLE_PIVOT,
-    "cube_order_stats": ORACLE_CUBE,
-    "buyers_with_events": ORACLE_SET_OPS,
-    "sessionize": ORACLE_SESSIONIZE,
-}
+
+def build_registry(
+    entries: list[tuple[str, Query, str]],
+) -> tuple[dict[str, Query], dict[str, str]]:
+    """Split ``(name, query, oracle_sql)`` triples into the ``QUERIES`` and
+    ``ORACLE_SQL`` dicts, both in list order. Raises on a repeated name or
+    an empty oracle, either of which a dict would otherwise absorb
+    silently (the later of two equal keys wins)."""
+    queries: dict[str, Query] = {}
+    oracles: dict[str, str] = {}
+    for name, query, sql in entries:
+        if name in queries:
+            raise ValueError(f"query {name!r} is registered twice")
+        if not (sql and sql.strip()):
+            raise ValueError(f"query {name!r} has an empty oracle")
+        queries[name] = query
+        oracles[name] = sql
+    return queries, oracles
+
+
+QUERIES: dict[str, Query]
+ORACLE_SQL: dict[str, str]
+QUERIES, ORACLE_SQL = build_registry(REGISTRY)

@@ -1,6 +1,8 @@
 """Engine-parity gate for the training-data-pipeline operators: every
 Spark implementation must match its DuckDB oracle exactly at sf0.001."""
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -28,6 +30,25 @@ def _match(spark, con, fn, sql, cols=None):
         f"spark-only={sorted(got - exp)[:2]} oracle-only={sorted(exp - got)[:2]}"
     )
     return got
+
+
+def _min_labels(pairs) -> dict:
+    """Plain union-find over undirected pairs: node -> min node id of its
+    connected component."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
 
 
 def test_simhash(spark, con):
@@ -73,23 +94,23 @@ def test_connected_components_converges_past_round_bound(spark):
     pairs = spark.createDataFrame(chain + tri, "doc_i long, doc_j long")
     got = {r["doc_id"]: r["component"]
            for r in D.connected_components(pairs).collect()}
-
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in chain + tri:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    exp = {v: find(v) for v in got}
-    assert got == exp
+    assert got == _min_labels(chain + tri)
     assert got[130] == 100 and got[502] == 500
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_cc_oracle_round_bound_holds_on_test_tables(sf):
+    """DuckDB only: on the sf0.001 and sf0.01 test tables, COMPONENT_ROUNDS
+    rounds of the fixed-bound CC oracle must already reach the true
+    components, or a deeper component would carry split labels in both
+    engines alike."""
+    path = os.path.join(os.path.dirname(SF), sf, "documents.parquet")
+    c = duckdb.connect()
+    c.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    pairs = [r[:2] for r in c.execute(D.ORACLE_JACCARD_PAIRS).fetchall()]
+    assert pairs
+    got = dict(c.execute(D.ORACLE_NEARDUP_COMPONENTS).fetchall())
+    assert got == _min_labels(pairs)
 
 
 def test_dedup_survivors_cc_matches_oracle(spark, con):

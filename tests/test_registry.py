@@ -9,7 +9,11 @@ physical-plan variant whose oracle is still value-checked through an
 in-record sibling.
 """
 
+import pytest
+
 import __spark_entry__ as E
+import bench
+from dots_ocr_spark import queries as Q
 
 DRIVER_RECORD_CAP = 50
 
@@ -54,3 +58,29 @@ def test_round4_dropout_is_recorded_now():
     recorded = list(E.queries())[:DRIVER_RECORD_CAP]
     for name in ("sessionize", "dedup_survivors_cc"):
         assert name in recorded
+
+
+def test_registry_build_rejects_duplicate_name():
+    """A dict literal keeps the later of two equal keys without a word;
+    the one-list build must refuse instead of dropping a query."""
+    entries = [("token_stats", Q.q_token_stats, Q.ORACLE_TOKEN_STATS),
+               ("token_stats", Q.q_fingerprint, Q.ORACLE_FINGERPRINT)]
+    with pytest.raises(ValueError, match="registered twice"):
+        Q.build_registry(entries)
+
+
+def test_registry_build_rejects_empty_oracle():
+    with pytest.raises(ValueError, match="empty oracle"):
+        Q.build_registry([("token_stats", Q.q_token_stats, "  \n")])
+
+
+def test_registry_dicts_follow_the_list():
+    assert list(Q.QUERIES) == [n for n, _, _ in Q.REGISTRY]
+    assert list(Q.ORACLE_SQL) == list(Q.QUERIES)
+
+
+def test_bench_headline_is_registered():
+    """bench.py refuses an unregistered HEADLINE name at run time; this
+    catches a rename before anyone runs the benchmark."""
+    qs = E.queries()
+    assert [n for n in bench.HEADLINE if n not in qs] == []

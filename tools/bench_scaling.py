@@ -4,8 +4,8 @@
 The rule requires the job to run on a cluster at N and 4N executors with
 throughput scaling efficiency >= 0.8. No real cluster exists in this
 sandbox, so per the driver's instruction we run the SAME job on the SAME
-input at two parallelism levels — local[8] (N) and local[32] (4N) — in
-fresh processes, and report throughput at both plus
+input at two parallelism levels — local[4] (N) and local[16] (4N) by
+default — in fresh processes, and report throughput at both plus
 
     efficiency = (docs_per_sec_4N / docs_per_sec_N) / 4
 
@@ -17,11 +17,13 @@ Iceberg table, not something the job synthesizes), then each level times
     parse+assemble (mapInPandas) -> count
 
 Each child warms its Python workers + JVM first (small pipeline run), then
-times the job twice and keeps the best run (the sandbox VM has noisy
-multi-second variance; best-of-2 measures capability, not noise).
-Results land in BENCH/BASELINE.md.
+times the job once. The headline is the median efficiency over the
+clean pairs (probe passed, efficiency ≤ 1) of the same shape in the
+history (:func:`headline`); the per-level max/max efficiency is
+reported only as an upper bound.
+Results land in BENCH/SCALING_LATEST.md.
 
-Usage: python tools/bench_scaling.py [--docs 120000] [--n 8] [--xn 32]
+Usage: python tools/bench_scaling.py [--docs 120000] [--n 4] [--xn 16]
 """
 
 from __future__ import annotations
@@ -132,6 +134,37 @@ def probe_health(floor: float, retries: int, wait: int) -> dict:
     return {"healthy": False, "probe_dps": history}
 
 
+def is_clean(pair: dict) -> bool:
+    """A pair counts toward the headline when its health probe passed and
+    its efficiency is at most 1: super-linear scaling on one host means
+    the N leg was depressed by contention, not that the job scaled."""
+    return bool(pair.get("probe_healthy")) and pair["efficiency"] <= 1.0
+
+
+def headline(history: list[dict], levels: list[int], docs: int) -> dict:
+    """Pick the scaling headline from the pair history (pure, no I/O).
+
+    Only pairs of this shape (same ``levels`` and ``docs``) count. The
+    headline ``median`` is the clean pair (:func:`is_clean`) with the
+    lower-median efficiency — a measured pair, not biased upward the way
+    the best-of-history maximum is — or None when no pair is clean.
+    ``upper_bound`` is the per-level max/max efficiency over every pair
+    of the shape; it bounds capability from above and is no headline."""
+    same = [p for p in history
+            if p.get("levels") == list(levels) and p.get("docs") == docs]
+    clean = sorted((p for p in same if is_clean(p)),
+                   key=lambda p: p["efficiency"])
+    upper = None
+    if same:
+        lo = max(p["N"]["docs_per_sec"] for p in same)
+        hi = max(p["4N"]["docs_per_sec"] for p in same)
+        upper = {"N": lo, "4N": hi,
+                 "efficiency": round((hi / lo) / (levels[1] / levels[0]), 3)}
+    return {"same_shape": same, "clean": clean,
+            "median": clean[(len(clean) - 1) // 2] if clean else None,
+            "upper_bound": upper}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=120000)
@@ -176,10 +209,8 @@ def main() -> None:
     # in depth: (a) gate each pair on a healthy-host PROBE so pairs only
     # run in clean windows; (b) interleave the levels back-to-back so
     # residual drift hits both legs of a pair ~equally; (c) append every
-    # pair to a persistent history and ALSO report per-level capability
-    # maxima across that history — the max docs/sec a level has ever
-    # demonstrated is contention-immune evidence of capability even when
-    # no single pair lands fully clean.
+    # pair to a persistent history and report the median over its clean
+    # pairs (see headline()).
     pairs = []
     for i in range(args.pairs):
         gate = ({"healthy": True, "probe_dps": []} if args.no_probe
@@ -203,18 +234,18 @@ def main() -> None:
             f.write(json.dumps(p) + "\n")
     history = [json.loads(ln) for ln in open(hist_path)
                if ln.strip()]
-    same_shape = [p for p in history
-                  if p.get("levels") == [args.n, args.xn]
-                  and p.get("docs") == args.docs]
-    clean = [p for p in same_shape if p.get("probe_healthy")]
-    best = max(clean or same_shape, key=lambda p: p["efficiency"])
-    cap_lo = max(p["N"]["docs_per_sec"] for p in same_shape)
-    cap_hi = max(p["4N"]["docs_per_sec"] for p in same_shape)
-    cap_eff = round((cap_hi / cap_lo) / (args.xn / args.n), 3)
-    lo, hi, eff = best["N"], best["4N"], best["efficiency"]
+    pick = headline(history, [args.n, args.xn], args.docs)
+    same_shape, clean = pick["same_shape"], pick["clean"]
+    cap_lo, cap_hi, cap_eff = (pick["upper_bound"][k]
+                               for k in ("N", "4N", "efficiency"))
+    if pick["median"] is None:
+        raise SystemExit(f"no clean pair of shape {args.n}/{args.xn} "
+                         f"x {args.docs} docs on record; rerun when the "
+                         "host is quiet")
+    lo, hi, eff = (pick["median"][k] for k in ("N", "4N", "efficiency"))
 
     def fmt_pair(p):
-        tag = "clean" if p.get("probe_healthy") else "CONTENDED"
+        tag = "clean" if is_clean(p) else "CONTENDED"
         return (f"  - eff {p['efficiency']} ({tag}; N {p['N']['docs_per_sec']}"
                 f" d/s, 4N {p['4N']['docs_per_sec']} d/s, probe "
                 f"{p.get('probe_dps')})")
@@ -228,7 +259,8 @@ identical input parquet at two parallelism levels (the sandbox stand-in
 for N vs 4N executors per the driver's instruction — no real cluster
 available here).
 
-Best probe-clean pair on record for this shape:
+Median clean pair on record for this shape ({len(clean)} of
+{len(same_shape)} pairs are clean):
 
 | level | cores | docs | wall (s) | docs/sec |
 |---|---|---|---|---|
@@ -238,11 +270,10 @@ Best probe-clean pair on record for this shape:
 **Scaling efficiency (N → 4N) = ({hi['docs_per_sec']} / {lo['docs_per_sec']}) / {args.xn // args.n}
 = {eff}**  (north-rule target ≥ 0.8)
 
-**Per-level capability maxima across all {len(same_shape)} recorded
-pairs of this shape: N = {cap_lo} d/s, 4N = {cap_hi} d/s →
-capability-maxima efficiency = {cap_eff}.** The maxima are
-contention-immune (each is the best its level has demonstrated in ANY
-window); a co-tenant can depress a leg but never inflate one.
+Upper bound, not a headline: the per-level maxima across all
+{len(same_shape)} recorded pairs of this shape are N = {cap_lo} d/s and
+4N = {cap_hi} d/s, so max/max efficiency ≤ {cap_eff}. Each maximum is
+the best of many noisy runs, so the ratio is biased upward.
 
 Method notes:
 
@@ -254,13 +285,14 @@ Method notes:
   over a 10% sample per child; `-Xms` presized heap.
 - Health gate: each pair waits for a clean host window — a local[8]
   probe extract must reach ≥{args.probe_floor} docs/sec (healthy range
-  2900-3700 on this VM) before the pair runs; pairs that never saw a
-  clean probe are marked CONTENDED and excluded from best-pair
-  selection (capability maxima still absorb their good legs).
+  2900-3700 on this VM) before the pair runs. Pairs that never saw a
+  clean probe, and pairs with efficiency > 1 (super-linear on one
+  host means the N leg ran slow), are marked CONTENDED and excluded
+  from the median.
 - This batch's pairs:
 {chr(10).join(fmt_pair(p) for p in pairs)}
 - Full history: BENCH/scaling_history.jsonl ({len(same_shape)} pairs of
-  this shape, {len(clean)} probe-clean).
+  this shape, {len(clean)} clean).
 - Split sizing: `spark.sql.files.maxPartitionBytes` =
   input_bytes/(cores×16) → ~16 task waves per core.
 - Produced by `python tools/bench_scaling.py --docs {args.docs} --n {args.n} --xn {args.xn}`.
@@ -268,8 +300,8 @@ Method notes:
     with open(os.path.join(REPO, "BENCH", args.out), "w") as f:
         f.write(md)
     print(json.dumps({"N": lo, "4N": hi, "efficiency": eff,
-                      "capability": {"N": cap_lo, "4N": cap_hi,
-                                     "efficiency": cap_eff}}))
+                      "clean_pairs": len(clean),
+                      "upper_bound": pick["upper_bound"]}))
     if not args.keep_input:
         shutil.rmtree(INPUT_DIR, ignore_errors=True)
 
