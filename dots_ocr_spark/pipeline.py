@@ -150,12 +150,16 @@ def assemble_documents(parsed: DataFrame) -> DataFrame:
             i.cast("int").alias("offset"),
         ),
     )
-    markdown = F.aggregate(
-        "ok_pages", F.lit(""), lambda acc, p: F.concat(acc, p["md"], F.lit("\n\n"))
-    )
-    markdown_nohf = F.aggregate(
-        "ok_pages", F.lit(""), lambda acc, p: F.concat(acc, p["md_nohf"], F.lit("\n\n"))
-    )
+
+    def fold(col: str):
+        # one join, linear in the document's bytes (a concat fold copies
+        # its accumulator at every page); md is never null on a non-failed
+        # page
+        return F.array_join(F.transform(
+            "ok_pages", lambda p: F.concat(p[col], F.lit("\n\n"))), "")
+
+    markdown = fold("md")
+    markdown_nohf = fold("md_nohf")
 
     return out.select(
         "doc_id",

@@ -140,7 +140,7 @@ def parse_final_json(text: str) -> Optional[list[dict]]:
             # gate, output_cleaner.py:43-107)
             return [x for x in data if isinstance(x, dict)]
         return None
-    except (json.JSONDecodeError, ValueError):
+    except (json.JSONDecodeError, ValueError, RecursionError):
         valid: list[dict] = []
         for m in _DICT_PATTERN.finditer(text):
             try:

@@ -22,6 +22,19 @@ Page statuses (analog of /root/reference/app/utils/executor/stats.py:23):
   ``failed``   — structurally illegal wellformed payload (missing/invalid
                  bbox or missing category ⇒ the reference raises and the
                  page ends failed after retries); contributes no spans.
+
+Hostile payloads end in a status, never an exception, so one page cannot
+abort the Spark task that holds it:
+  * a cell whose ``category`` is not a string (``"category": 5``) →
+    ``failed``;
+  * a cell whose ``text`` the renderer cannot take — not a string, and
+    truthy or on a Formula cell (``"text": 7``) → ``failed``. Falsy
+    non-string texts of other cells render as "" and stay ``ok``;
+  * nesting too deep for ``json.loads`` (100,000 ``[``) → ``fallback``:
+    the repair chain treats the ``RecursionError`` as a parse failure.
+Both cell checks look at the payload as given, so they also fail a page
+whose offending cell a later rule would have dropped (IoU suppression) or
+rewritten (word fill, TOC rebuild).
 """
 
 from __future__ import annotations
@@ -57,6 +70,19 @@ def _fallback_page(payload, width: int, height: int) -> list[dict]:
     return [{"bbox": [0, 0, width, height], "category": "Text", "text": degraded_text}]
 
 
+def _renderable(cell) -> bool:
+    """Whether ``render.render_cell_markdown`` can take the cell's text: a
+    string (or none at all), or for a non-Formula cell any falsy value,
+    which it renders as ""."""
+    text = cell.get("text", "")
+    if isinstance(text, str):
+        return True
+    category = cell["category"]
+    if category == "Formula" or geometry.CATEGORY_REMAP.get(category) == "Formula":
+        return False
+    return not text
+
+
 def _validate_cells(cells, width, height):
     """F1 + P5 — reject structurally illegal pages, clamp the legal ones.
 
@@ -71,6 +97,8 @@ def _validate_cells(cells, width, height):
         if not isinstance(cell, dict) or "bbox" not in cell or "category" not in cell:
             return None
         if not geometry.bbox_is_legal(cell["bbox"]):
+            return None
+        if not isinstance(cell["category"], str) or not _renderable(cell):
             return None
         c = dict(cell)
         c["bbox"] = geometry.clamp_bbox(c["bbox"], width, height)
@@ -172,24 +200,25 @@ def process_page(
     out_width = int(float(width) / scale_factor)
     out_height = int(float(height) / scale_factor)
 
-    # 7. render (A3/F3) ---------------------------------------------------
-    md = render.cells_to_markdown(cells)
-    md_nohf = render.cells_to_markdown(cells, no_page_hf=True)
+    # 7. render (A3/F3): each cell once; the page Markdown and its nohf
+    # variant are joins of the rendered items (cells_to_markdown's fold)
+    rendered = [render.render_cell_markdown(c) for c in cells]
+    md = "\n\n".join(rendered)
+    md_nohf = "\n\n".join(
+        text for c, text in zip(cells, rendered)
+        if c.get("category") not in render.PAGE_HF_CATEGORIES
+    )
 
     # 8. span emission -----------------------------------------------------
     spans = []
-    for c in cells:
+    for c, text in zip(cells, rendered):
         category = c.get("category", "")
         if category == PICTURE:
             ref = c.get("media_ref") or media_ref_for(doc_id, page_no, c["bbox"])
             spans.append({"kind": category.lower(), "text": None, "media_ref": ref})
         else:
             spans.append(
-                {
-                    "kind": category.lower(),
-                    "text": render.render_cell_markdown(c),
-                    "media_ref": None,
-                }
+                {"kind": category.lower(), "text": text, "media_ref": None}
             )
 
     return {

@@ -1,0 +1,60 @@
+"""A hostile page payload fails (or degrades) that page, never the job:
+``process_page`` returns a status for each payload below instead of
+raising, and inside ``mapInPandas`` the document still comes out."""
+
+import json
+
+import pytest
+
+from dots_ocr_spark import oracle, pipeline, schemas
+from dots_ocr_spark.spec.page import process_page
+
+BBOX = [10, 10, 200, 60]
+
+NON_STRING_CATEGORY = json.dumps([{"bbox": BBOX, "category": 5, "text": "a"}])
+NON_STRING_TEXT = json.dumps([{"bbox": BBOX, "category": "Text", "text": 7}])
+DEEP_NESTING = "[" * 100_000
+GOOD = json.dumps([{"bbox": BBOX, "category": "Text", "text": "fine"}])
+
+
+def _page(payload):
+    return process_page(payload, 1000, 1000, doc_id="d", page_no=0)
+
+
+def test_non_string_category_fails_the_page():
+    r = _page(NON_STRING_CATEGORY)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
+def test_non_string_text_fails_the_page():
+    r = _page(NON_STRING_TEXT)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
+def test_deep_nesting_falls_back():
+    r = _page(DEEP_NESTING)
+    assert r["status"] == "fallback"
+    assert r["spans"] == [{"kind": "text", "text": "", "media_ref": None}]
+
+
+@pytest.mark.parametrize("text", [None, 0, False, [], ""])
+def test_falsy_text_still_renders_empty(text):
+    r = _page(json.dumps([{"bbox": BBOX, "category": "Text", "text": text}]))
+    assert r["status"] == "ok" and r["spans"][0]["text"] == ""
+
+
+@pytest.mark.parametrize("mode", ["fused", "scatter"])
+def test_hostile_pages_do_not_abort_the_job(spark, mode):
+    payloads = [GOOD, NON_STRING_CATEGORY, NON_STRING_TEXT, DEEP_NESTING]
+    pages = [{"page_no": i, "width": 1000, "height": 1000,
+              "scale_factor": 1.0, "payload": p, "toc_json": None,
+              "words_json": None} for i, p in enumerate(payloads)]
+    doc = {"doc_id": "hostile", "pages": pages}
+    row = ("hostile", [], [tuple(p[f.name] for f in schemas.PAGE.fields)
+                           for p in pages], len(pages), "small")
+    docs = spark.createDataFrame([row], schemas.INPUT)
+    got = pipeline.extract(docs, mode=mode).collect()[0].asDict(recursive=True)
+    want = oracle.extract_document(doc)
+    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (4, 2, 1)
+    for key in ("markdown", "markdown_nohf", "n_spans", "status"):
+        assert got[key] == want[key], key

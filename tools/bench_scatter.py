@@ -10,10 +10,13 @@ giant across the cluster.
 
 This tool plants one giant document (``--giant-pages``, default 10000,
 built by tiling a generated doc's pages) into a corpus of normal docs and
-times both modes, alternating runs to ride out VM noise. Results go to
-BENCH/BASELINE.md.
+times both modes, alternating runs to ride out VM noise. Each run writes
+every output column to Spark's ``noop`` sink: a ``.count()`` would let
+Spark prune the markdown columns out of scatter's JVM assembly while the
+opaque fused UDF still computes them. Results go to BENCH/BASELINE.md.
 
 Usage: python tools/bench_scatter.py [--docs 2000] [--giant-pages 10000]
+       [--cpus N]  (default: $SPARK_GRAFT_CPUS, else the host's CPU count)
 """
 
 from __future__ import annotations
@@ -33,7 +36,8 @@ def main() -> int:
     ap.add_argument("--docs", type=int, default=2000)
     ap.add_argument("--giant-pages", type=int, default=10000)
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                               os.cpu_count())))
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
@@ -43,7 +47,7 @@ def main() -> int:
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("scatter-bench")
         .config("spark.sql.shuffle.partitions", str(args.cpus * 2))
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
@@ -78,18 +82,24 @@ def main() -> int:
     n_pages_total = args.giant_pages + \
         int(normal.selectExpr("sum(n_pages)").collect()[0][0])
 
+    def run(df, mode: str) -> None:
+        pipeline.extract(df, mode=mode).write.format("noop") \
+            .mode("overwrite").save()
+
     # warmup both paths
     warm = pipeline.generate_input(spark, 64)
-    pipeline.extract(warm, mode="fused").count()
-    pipeline.extract(warm, mode="scatter").count()
+    run(warm, "fused")
+    run(warm, "scatter")
 
     walls: dict[str, list[float]] = {"fused": [], "scatter": []}
     for _ in range(args.reps):
         for mode in ("fused", "scatter"):
             t0 = time.perf_counter()
-            n = pipeline.extract(docs, mode=mode).count()
+            run(docs, mode)
             walls[mode].append(time.perf_counter() - t0)
-            assert n == args.docs + 1, n
+    for mode in walls:
+        n = pipeline.extract(docs, mode=mode).count()
+        assert n == args.docs + 1, (mode, n)
     best = {m: min(v) for m, v in walls.items()}
     print(f"corpus: {args.docs} normal docs + 1 giant of "
           f"{args.giant_pages} pages ({n_pages_total} pages total), "
