@@ -13,6 +13,8 @@ Extra fields (informational, not part of the driver contract):
 ``docs_per_sec`` — end-to-end extraction throughput of the flagship
 pipeline, the authoritative BASELINE.json metric (see BENCH/BASELINE.md
 for the two-parallelism scaling run produced by tools/bench_scaling.py).
+Per-query output row counts go to ``BENCH/bench_detail.json``, which
+keeps the printed line short enough for a 2,000-char log tail.
 """
 
 from __future__ import annotations
@@ -162,13 +164,24 @@ def main() -> None:
             contended.append(name)
         timings[name] = round(best, 3)
 
-    total = round(sum(timings.values()), 3)
+    # per-query output row counts: a row-count shift flags an input
+    # change that would make timings non-comparable across rounds
+    with open(os.path.join(os.path.dirname(ref_path), "bench_detail.json"),
+              "w") as f:
+        json.dump({"sf": sf, "cpus": cpus, "query_rows": rows}, f, indent=1)
+    print(summary_line(timings, rows, sf, cpus, probe_dps, contended))
+    spark.stop()
+
+
+def summary_line(timings: dict[str, float], rows: dict[str, int], sf: float,
+                 cpus: int, probe_dps: float, contended: list[str]) -> str:
+    """The one JSON line ``main`` prints last."""
     # throughput from MEASURED counts (extract_docs is one row per doc),
     # never from a duplicated sizing constant
     flagship_t = timings.get("extract_docs", 0.0) or 1e-9
-    out = {
+    return json.dumps({
         "metric": "headline query suite wall-clock (extraction + dedup + analytics)",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
@@ -179,13 +192,7 @@ def main() -> None:
         "contended_queries": contended,
         "extract_spans_rows": rows.get("extract_spans", 0),
         "extract_docs_per_sec": round(rows.get("extract_docs", 0) / flagship_t, 2),
-        # per-query output row counts: freezes the input contract — a
-        # row-count shift flags an input change that would make timings
-        # non-comparable across rounds
-        "query_rows": rows,
-    }
-    print(json.dumps(out))
-    spark.stop()
+    }, separators=(",", ":"))
 
 
 if __name__ == "__main__":

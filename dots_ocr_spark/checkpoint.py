@@ -13,29 +13,33 @@ ships no Iceberg catalog; on a real deployment swap the two writers for
     partition overwrite — re-processing a bucket atomically replaces its
     directory, so a crash mid-bucket can never duplicate rows.
   * Lineage table: one row per completed bucket ``(bucket, run_id,
-    n_docs, n_spans, n_failed_pages, completed_at_unix)``, appended AFTER
-    the bucket's output commit. Crash between the two writes ⇒ the bucket
-    is simply re-done (idempotent), never skipped-but-missing.
-  * Resume = left-anti join of the bucket domain against the lineage
-    table: completed buckets are pruned BEFORE any Python work runs — at
-    the scan, via partition-pruning-friendly ``bucket IN (...)`` when the
-    remaining set is small, else the anti-join.
+    n_docs, n_spans, n_failed_pages, n_fallback_pages,
+    completed_at_unix)``, appended AFTER the bucket's output commit. Its
+    counts are observed during that output write (``DataFrame.observe``),
+    not re-read from the output. Crash between the two writes ⇒ the
+    bucket is simply re-done (idempotent), never skipped-but-missing.
+  * Resume = the bucket domain minus the lineage table's buckets:
+    completed buckets are pruned BEFORE any Python work runs — at the
+    scan, via a partition-pruning-friendly ``bucket IN (...)`` per
+    commit group.
   * Metrics: per-bucket page/doc counters live in the lineage rows;
     ``metrics_summary`` aggregates them (A4/A5 analog).
 
 Buckets are processed in groups of ``buckets_per_commit`` to bound commit
-frequency (one Spark job + one lineage append per group) — the knob
+frequency (one output write + one lineage append per group) — the knob
 trades restart granularity against job-scheduling overhead, exactly like
 Iceberg snapshot batching.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import time
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
@@ -67,50 +71,48 @@ def _bucket(n_buckets: int) -> Column:
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def _commit_lineage(spark: SparkSession, output_path: str, lineage_path: str,
-                    keys: list[str], group: list[tuple], in_group: Column,
-                    counts: dict[str, Column], run_id: str) -> None:
-    """Append one lineage row per unit of ``group`` (tuples over ``keys``),
-    with ``counts`` re-read from the COMMITTED output — call it only after
-    the group's output write. EVERY unit gets a row: an empty unit writes
-    no output partition, so deriving lineage from written partitions alone
-    would leave it permanently "incomplete" and reprocessed on every
-    resume (never a no-op on sparse inputs). The group domain is
-    left-joined against the written counts, defaulting to zeros."""
+def _write_group(out: DataFrame, output_path: str, lineage_path: str,
+                 lineage_schema: T.StructType, keys: list[str],
+                 group: list[tuple], values: dict[str, Column],
+                 run_id: str) -> None:
+    """Commit one group: the dynamic-overwrite write of ``out``, then one
+    lineage row per unit of ``group`` (tuples over ``keys``) summing the
+    per-row ``values`` observed during that write; an empty unit gets
+    zeros. The observation is in the write's result stage, whose
+    accumulator updates count once per partition: a failed attempt's
+    partial counts are dropped and a retry is not counted twice."""
+    obs = Observation()
+    sums = []
+    for i, unit in enumerate(group):
+        in_unit = functools.reduce(
+            operator.and_, [F.col(k) == v for k, v in zip(keys, unit)])
+        sums += [F.sum(F.when(in_unit, v)).alias(f"{n}_{i}")
+                 for n, v in values.items()]
+    out.observe(obs, *sums).write.mode("overwrite").partitionBy(*keys) \
+        .parquet(output_path)
+    seen, now = obs.get, time.time()
+    rows = [(*unit, run_id, *[seen.get(f"{n}_{i}") or 0 for n in values], now)
+            for i, unit in enumerate(group)]
+    out.sparkSession.createDataFrame(rows, lineage_schema).write \
+        .mode("append").parquet(lineage_path)
+
+
+def _completed(spark: SparkSession, path: str, schema: T.StructType,
+               keys: list[str]) -> set[tuple]:
+    """Units committed by any previous run. Only a missing table means
+    none: taking any other read error as none would redo every unit and
+    append a second lineage row for each."""
     try:
-        written = (
-            spark.read.parquet(output_path).where(in_group)
-            .groupBy(*keys).agg(*[c.alias(n) for n, c in counts.items()])
-        )
+        rows = spark.read.schema(schema).parquet(path).select(*keys).collect()
     except AnalysisException:
-        # an all-empty commit group writes no part files at all, so
-        # parquet schema inference fails (UNABLE_TO_INFER_SCHEMA /
-        # PATH_NOT_FOUND) — every unit gets zeros. Only analysis
-        # errors mean "no output"; IO errors must surface, otherwise
-        # a transient read failure would silently commit zero-count
-        # lineage and mark unprocessed units complete.
-        written = spark.createDataFrame([], ", ".join(
-            [f"{k} int" for k in keys] + [f"{n} long" for n in counts]))
-    domain = spark.createDataFrame(
-        [tuple(int(v) for v in u) for u in group],
-        ", ".join(f"{k} int" for k in keys))
-    domain.join(written, keys, "left").select(
-        *keys,
-        F.lit(run_id).alias("run_id"),
-        *[F.coalesce(n, F.lit(0)).cast("long").alias(n) for n in counts],
-        F.lit(time.time()).alias("completed_at_unix"),
-    ).write.mode("append").parquet(lineage_path)
+        return set()
+    return {tuple(r) for r in rows}
 
 
 def completed_buckets(spark: SparkSession, base: str) -> set[int]:
     """Buckets already committed by any previous run (the resume scan)."""
-    path = _lineage_path(base)
-    try:
-        rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path) \
-            .select("bucket").distinct().collect()
-    except Exception:
-        return set()
-    return {r["bucket"] for r in rows}
+    return {b for b, in _completed(
+        spark, _lineage_path(base), LINEAGE_SCHEMA, ["bucket"])}
 
 
 def run_extraction(
@@ -198,17 +200,12 @@ def run_extraction(
             chunk = bucketed.where(F.col("bucket").isin(group)).drop("bucket")
         out = pipeline.extract(chunk, mode=mode).withColumn(
             "bucket", _bucket(n_buckets))
-        # 1) output commit: dynamic overwrite replaces exactly these buckets
-        out.write.mode("overwrite").partitionBy("bucket") \
-            .parquet(_output_path(base))
-        # 2) lineage commit, after the data is durable
-        _commit_lineage(
-            spark, _output_path(base), _lineage_path(base), ["bucket"],
-            [(b,) for b in group], F.col("bucket").isin(group),
-            {"n_docs": F.count("*"),
-             "n_spans": F.sum("n_spans"),
-             "n_failed_pages": F.sum("n_failed"),
-             "n_fallback_pages": F.sum("n_fallback")},
+        _write_group(
+            out, _output_path(base), _lineage_path(base), LINEAGE_SCHEMA,
+            ["bucket"], [(b,) for b in group],
+            {"n_docs": F.lit(1), "n_spans": F.col("n_spans"),
+             "n_failed_pages": F.col("n_failed"),
+             "n_fallback_pages": F.col("n_fallback")},
             run_id)
 
     return {
@@ -272,13 +269,8 @@ def _pages_path(base: str) -> str:
 
 def completed_page_units(spark: SparkSession, base: str) -> set[tuple[int, int]]:
     """(bucket, prange) units committed by any previous run."""
-    try:
-        rows = spark.read.schema(PAGE_LINEAGE_SCHEMA) \
-            .parquet(_page_lineage_path(base)) \
-            .select("bucket", "prange").distinct().collect()
-    except Exception:
-        return set()
-    return {(r["bucket"], r["prange"]) for r in rows}
+    return _completed(spark, _page_lineage_path(base), PAGE_LINEAGE_SCHEMA,
+                      ["bucket", "prange"])
 
 
 def _page_grain(docs: DataFrame, n_buckets: int, pages_per_range: int) -> DataFrame:
@@ -372,15 +364,12 @@ def run_extraction_paged(
         out = parsed.withColumn("bucket", _bucket(n_buckets)).withColumn(
             "prange",
             F.floor(F.col("page_no") / F.lit(pages_per_range)).cast("int"))
-        out.write.mode("overwrite").partitionBy("bucket", "prange") \
-            .parquet(_pages_path(base))
-        _commit_lineage(
-            spark, _pages_path(base), _page_lineage_path(base),
-            ["bucket", "prange"], group, in_group,
-            {"n_pages": F.count("*"),
-             "n_failed_pages": F.sum((F.col("status") == "failed").cast("long")),
-             "n_fallback_pages":
-                 F.sum((F.col("status") == "fallback").cast("long"))},
+        _write_group(
+            out, _pages_path(base), _page_lineage_path(base),
+            PAGE_LINEAGE_SCHEMA, ["bucket", "prange"], group,
+            {"n_pages": F.lit(1),
+             "n_failed_pages": (F.col("status") == "failed").cast("long"),
+             "n_fallback_pages": (F.col("status") == "fallback").cast("long")},
             run_id)
 
     return {

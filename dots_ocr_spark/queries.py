@@ -654,7 +654,9 @@ def q_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus into a user-scoped scratch location, then aggregates the
     per-bucket lineage rows exactly as the reference rolls up task stats
     (/root/reference/app/utils/executor/stats.py:22-41). The oracle reads
-    the SAME lineage parquet, independently verifying the rollup."""
+    only ``run_id`` and ``n_buckets`` from the lineage parquet and every
+    count from the committed output, so it checks the counts the runner
+    observed during its writes against what those writes left behind."""
     import shutil
 
     from . import checkpoint
@@ -676,14 +678,14 @@ def q_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_METRICS_SUMMARY = f"""
-SELECT run_id,
-       count(*) AS n_buckets,
-       CAST(sum(n_docs) AS BIGINT) AS n_docs,
-       CAST(sum(n_spans) AS BIGINT) AS n_spans,
-       CAST(sum(n_failed_pages) AS BIGINT) AS n_failed_pages,
-       CAST(sum(n_fallback_pages) AS BIGINT) AS n_fallback_pages
-FROM read_parquet('{METRICS_DEMO_BASE}/_lineage/*.parquet')
-GROUP BY run_id
+SELECT run_id, count(*) AS n_buckets, written.*
+FROM read_parquet('{METRICS_DEMO_BASE}/_lineage/*.parquet'), (
+    SELECT CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_spans) AS BIGINT) AS n_spans,
+           CAST(sum(n_failed) AS BIGINT) AS n_failed_pages,
+           CAST(sum(n_fallback) AS BIGINT) AS n_fallback_pages
+    FROM read_parquet('{METRICS_DEMO_BASE}/output/*/*.parquet')) AS written
+GROUP BY ALL
 """
 
 

@@ -264,10 +264,6 @@ N_PROBE = 2          # query probes its 2 nearest centroids
 IVF_TOP_K = 3
 
 
-def _cos(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _centroids(emb: DataFrame) -> DataFrame:
     # centroid norm precomputed once per centroid (K rows), not per
     # scored pair — same value, bit-identical cosine

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import re
+from contextlib import suppress
 from typing import Any, Optional
 
 # Regex shapes per /root/reference/dots_ocr/utils/output_cleaner.py:37-39
@@ -214,14 +215,17 @@ def dedup_threshold(cells: list[dict]) -> list[dict]:
 
     pair_positions: dict[tuple, list[int]] = {}
     bbox_positions: dict[tuple, list[int]] = {}
+    # a key holding a JSON list or object is unhashable: never a duplicate
     for i, item in enumerate(cells):
         if isinstance(item, dict) and "category" in item and "text" in item:
             key = (item.get("category", ""), item.get("text", ""))
-            pair_positions.setdefault(key, []).append(i)
+            with suppress(TypeError):
+                pair_positions.setdefault(key, []).append(i)
         if isinstance(item, dict) and "bbox" in item:
             bbox = item.get("bbox")
             if isinstance(bbox, list) and len(bbox) > 0:
-                bbox_positions.setdefault(tuple(bbox), []).append(i)
+                with suppress(TypeError):
+                    bbox_positions.setdefault(tuple(bbox), []).append(i)
 
     to_remove: set[int] = set()
     for positions in pair_positions.values():

@@ -35,11 +35,6 @@ CATEGORY_REMAP = {
     "figure": "Picture",
 }
 
-CATEGORIES = [
-    "Caption", "Footnote", "Formula", "List-item", "Page-footer",
-    "Page-header", "Picture", "Section-header", "Table", "Text", "Title",
-]
-
 
 def round_by_factor(number, factor: int) -> int:
     return round(number / factor) * factor

@@ -31,8 +31,11 @@ abort the Spark task that holds it:
     truthy or on a Formula cell (``"text": 7``) → ``failed``. Falsy
     non-string texts of other cells render as "" and stay ``ok``;
   * nesting too deep for ``json.loads`` (100,000 ``[``) → ``fallback``:
-    the repair chain treats the ``RecursionError`` as a parse failure.
-Both cell checks look at the payload as given, so they also fail a page
+    the repair chain treats the ``RecursionError`` as a parse failure;
+  * an unparseable payload whose repair salvages a cell with a non-string
+    text (``"text": 7`` then junk; ``["a"]`` or ``{"a": 1}`` before a
+    truncated tail) → ``failed``: the degraded page only joins strings.
+The first two checks look at the payload as given, so they also fail a page
 whose offending cell a later rule would have dropped (IoU suppression) or
 rewritten (word fill, TOC rebuild).
 """
@@ -61,13 +64,15 @@ def media_ref_for(doc_id: str, page_no: int, bbox) -> str:
     return "crop-" + hashlib.md5(key.encode("utf-8")).hexdigest()[:16]
 
 
-def _fallback_page(payload, width: int, height: int) -> list[dict]:
-    """Degraded single-cell page for an unparseable payload."""
-    cells = cleaner.clean_model_output(payload)
-    degraded_text = "\n\n".join(
-        cell["text"] for cell in cells if isinstance(cell, dict) and "text" in cell
-    )
-    return [{"bbox": [0, 0, width, height], "category": "Text", "text": degraded_text}]
+def _fallback_page(payload, width: int, height: int) -> list[dict] | None:
+    """Degraded single-cell page for an unparseable payload; None (the page
+    fails) when a salvaged cell's text is not a string."""
+    texts = [cell["text"] for cell in cleaner.clean_model_output(payload)
+             if isinstance(cell, dict) and "text" in cell]
+    if not all(isinstance(t, str) for t in texts):
+        return None
+    return [{"bbox": [0, 0, width, height], "category": "Text",
+             "text": "\n\n".join(texts)}]
 
 
 def _renderable(cell) -> bool:

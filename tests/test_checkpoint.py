@@ -291,3 +291,26 @@ def test_job_cli_rejects_removed_mode(tmp_path, monkeypatch, capsys):
         job.main()
     assert exc.value.code == 2
     assert "invalid choice: 'paged'" in capsys.readouterr().err
+
+
+def test_resume_raises_on_unreadable_lineage(spark, docs, tmp_path):
+    """Only a MISSING lineage table means "nothing done". A lineage file
+    the resume scan cannot read must raise: treating it as empty would
+    redo every bucket and append a second lineage row for each, which
+    ``metrics_summary`` then reports as a second run."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    base = str(tmp_path / "corrupt")
+    checkpoint.run_extraction(
+        spark, docs, base, n_buckets=8, buckets_per_commit=8, run_id="ok")
+    lineage_dir = os.path.join(base, "_lineage")
+    with open(os.path.join(lineage_dir, "part-99999-junk.parquet"), "w") as f:
+        f.write("this is not a parquet file")
+    before = sorted(os.listdir(lineage_dir))
+    with pytest.raises(Py4JJavaError):
+        checkpoint.run_extraction(
+            spark, docs, base, n_buckets=8, buckets_per_commit=8,
+            run_id="again")
+    assert sorted(os.listdir(lineage_dir)) == before   # nothing appended

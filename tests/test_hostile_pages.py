@@ -15,6 +15,13 @@ NON_STRING_CATEGORY = json.dumps([{"bbox": BBOX, "category": 5, "text": "a"}])
 NON_STRING_TEXT = json.dumps([{"bbox": BBOX, "category": "Text", "text": 7}])
 DEEP_NESTING = "[" * 100_000
 GOOD = json.dumps([{"bbox": BBOX, "category": "Text", "text": "fine"}])
+# unparseable payloads whose repair salvages a cell with a non-string text
+SALVAGED_INT_TEXT = '[{"bbox":[1,2,30,40],"category":"Text","text":7}] junk'
+SALVAGED_LIST_TEXTS = (
+    '[{"bbox":[1,2,30,40],"category":"Text","text":["a"]},'
+    '{"bbox":[1,2,30,41],"category":"Text","text":["b"]},{"bbox":[1,2')
+SALVAGED_DICT_TEXTS = SALVAGED_LIST_TEXTS.replace(
+    '["a"]', '{"a":1}').replace('["b"]', '{"b":1}')
 
 
 def _page(payload):
@@ -37,6 +44,27 @@ def test_deep_nesting_falls_back():
     assert r["spans"] == [{"kind": "text", "text": "", "media_ref": None}]
 
 
+def test_salvaged_int_text_fails_the_page():
+    r = _page(SALVAGED_INT_TEXT)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
+def test_salvaged_list_texts_fail_the_page():
+    r = _page(SALVAGED_LIST_TEXTS)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
+def test_salvaged_dict_texts_fail_the_page():
+    r = _page(SALVAGED_DICT_TEXTS)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
+def test_salvaged_string_texts_still_fall_back():
+    r = _page(SALVAGED_LIST_TEXTS.replace('["a"]', '"a"').replace('["b"]', '"b"'))
+    assert r["status"] == "fallback"
+    assert r["spans"] == [{"kind": "text", "text": "a\n\nb", "media_ref": None}]
+
+
 @pytest.mark.parametrize("text", [None, 0, False, [], ""])
 def test_falsy_text_still_renders_empty(text):
     r = _page(json.dumps([{"bbox": BBOX, "category": "Text", "text": text}]))
@@ -45,7 +73,8 @@ def test_falsy_text_still_renders_empty(text):
 
 @pytest.mark.parametrize("mode", ["fused", "scatter"])
 def test_hostile_pages_do_not_abort_the_job(spark, mode):
-    payloads = [GOOD, NON_STRING_CATEGORY, NON_STRING_TEXT, DEEP_NESTING]
+    payloads = [GOOD, NON_STRING_CATEGORY, NON_STRING_TEXT, DEEP_NESTING,
+                SALVAGED_INT_TEXT, SALVAGED_LIST_TEXTS, SALVAGED_DICT_TEXTS]
     pages = [{"page_no": i, "width": 1000, "height": 1000,
               "scale_factor": 1.0, "payload": p, "toc_json": None,
               "words_json": None} for i, p in enumerate(payloads)]
@@ -55,6 +84,6 @@ def test_hostile_pages_do_not_abort_the_job(spark, mode):
     docs = spark.createDataFrame([row], schemas.INPUT)
     got = pipeline.extract(docs, mode=mode).collect()[0].asDict(recursive=True)
     want = oracle.extract_document(doc)
-    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (4, 2, 1)
+    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (7, 5, 1)
     for key in ("markdown", "markdown_nohf", "n_spans", "status"):
         assert got[key] == want[key], key

@@ -84,3 +84,18 @@ def test_bench_headline_is_registered():
     catches a rename before anyone runs the benchmark."""
     qs = E.queries()
     assert [n for n in bench.HEADLINE if n not in qs] == []
+
+
+def test_bench_last_line_fits_the_log_tail():
+    """bench.py's last printed line must parse from a 2,000-char log
+    tail: with every HEADLINE query, large values, and every query
+    labeled contended, the line still fits and is valid JSON."""
+    import json
+
+    timings = {n: 123456.789 for n in bench.HEADLINE}
+    rows = {n: 10**12 for n in bench.HEADLINE}
+    line = bench.summary_line(timings, rows, 100.0, 1024, 123456789.5,
+                              list(bench.HEADLINE))
+    assert len(line) < 2000, len(line)
+    out = json.loads(line)
+    assert out["queries"] == timings and "query_rows" not in out
