@@ -1,18 +1,19 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line:
+(default: the sf0.1 test-data directory) on local[$SPARK_GRAFT_CPUS]
+(default: the host's CPU count) and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is materialized with a cheap count-collect (the driver collects
 separately; here we only need the plan to execute fully). Timing is
-per-query wall clock; ``value`` is the total.
+per-query wall clock, the best of two runs; ``value`` is the total.
 
 Extra fields (informational, not part of the driver contract):
-``docs_per_sec`` — end-to-end extraction throughput of the flagship
-pipeline, the authoritative BASELINE.json metric (see BENCH/BASELINE.md
-for the two-parallelism scaling run produced by tools/bench_scaling.py).
+``extract_docs_per_sec`` — end-to-end extraction throughput of the
+flagship pipeline, the authoritative BASELINE.json metric (see
+BENCH/SCALING_LATEST.md for the two-parallelism scaling run produced by
+tools/bench_scaling.py).
 Per-query output row counts go to ``BENCH/bench_detail.json``, which
 keeps the printed line short enough for a 2,000-char log tail.
 """
@@ -35,7 +36,7 @@ def build_spark(cpus: int):
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -44,7 +45,7 @@ def build_spark(cpus: int):
 
 # NOTE (round-over-round comparability): this list is append-only within
 # a round series and every query's INPUT construction is frozen — the
-# bench JSON records per-query output row counts (``query_rows``) so a
+# detail file records per-query output row counts (``query_rows``) so a
 # changed input is immediately visible as a row-count shift rather than
 # a silent timing discontinuity (the r01→r02 ambiguity).
 HEADLINE = [
@@ -88,7 +89,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
 
@@ -120,61 +121,30 @@ def main() -> None:
     if "extract_spans" in qs and os.path.isdir(warm_sf):
         qs["extract_spans"](spark, warm_sf).count()
 
-    # Pre-suite health probe: flagship-extract throughput over a small
-    # fresh input (workers already warm). The asymmetric co-tenant this
-    # VM carries can depress individual legs 3-5x; recording the probe
-    # makes a polluted record self-describing instead of looking like a
-    # code regression (the r4 phantom-regression lesson).
-    t0 = time.perf_counter()
-    n_probe = _p.extract(_p.generate_input(spark, 2000, partitions=cpus)).count()
-    probe_dps = round(n_probe / (time.perf_counter() - t0), 1)
-
-    # Per-query reference bests (committed; merge-min across rounds).
-    ref_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH", "bench_reference.json")
-    try:
-        ref = json.load(open(ref_path))["best_sec"]
-    except Exception:
-        ref = {}
-    if abs(sf - 0.1) > 1e-9:
-        ref = {}    # reference bests are sf0.1-specific
-
-    # Best-of-2 per query, escalating to best-of-4 when the result still
-    # exceeds 1.5x the committed reference best: a single co-tenant
-    # burst then has to survive four separate windows to pollute the
-    # record, and anything that does is labeled ``contended`` instead of
-    # masquerading as a regression. (Round-4's recorded 2-3x
-    # "regressions" on untouched shuffle queries did not survive ONE
-    # re-run — this automates that adjudication.)
+    # Best-of-2 per query: the faster of two runs, each a full execution.
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
-    contended: list[str] = []
     for name in HEADLINE:
         best = float("inf")
-        runs = 0
-        while runs < 4:
+        for _ in range(2):
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             rows[name] = df.count()
             best = min(best, time.perf_counter() - t0)
-            runs += 1
-            if runs >= 2 and (name not in ref or best <= 1.5 * ref[name]):
-                break
-        if name in ref and best > 1.5 * ref[name]:
-            contended.append(name)
         timings[name] = round(best, 3)
 
     # per-query output row counts: a row-count shift flags an input
     # change that would make timings non-comparable across rounds
-    with open(os.path.join(os.path.dirname(ref_path), "bench_detail.json"),
-              "w") as f:
+    detail = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                          "BENCH", "bench_detail.json")
+    with open(detail, "w") as f:
         json.dump({"sf": sf, "cpus": cpus, "query_rows": rows}, f, indent=1)
-    print(summary_line(timings, rows, sf, cpus, probe_dps, contended))
+    print(summary_line(timings, rows, sf, cpus))
     spark.stop()
 
 
 def summary_line(timings: dict[str, float], rows: dict[str, int], sf: float,
-                 cpus: int, probe_dps: float, contended: list[str]) -> str:
+                 cpus: int) -> str:
     """The one JSON line ``main`` prints last."""
     # throughput from MEASURED counts (extract_docs is one row per doc),
     # never from a duplicated sizing constant
@@ -186,10 +156,6 @@ def summary_line(timings: dict[str, float], rows: dict[str, int], sf: float,
         "queries": timings,
         "sf": sf,
         "cpus": cpus,
-        "timing": "best-of-2 per query, best-of-4 when >1.5x the "
-                  "committed reference best (host co-tenant guard)",
-        "probe_docs_per_sec": probe_dps,
-        "contended_queries": contended,
         "extract_spans_rows": rows.get("extract_spans", 0),
         "extract_docs_per_sec": round(rows.get("extract_docs", 0) / flagship_t, 2),
     }, separators=(",", ":"))

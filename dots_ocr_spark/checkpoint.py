@@ -42,7 +42,6 @@ import uuid
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.errors import AnalysisException
 
 from . import pipeline
 
@@ -93,19 +92,21 @@ def _write_group(out: DataFrame, output_path: str, lineage_path: str,
     seen, now = obs.get, time.time()
     rows = [(*unit, run_id, *[seen.get(f"{n}_{i}") or 0 for n in values], now)
             for i, unit in enumerate(group)]
-    out.sparkSession.createDataFrame(rows, lineage_schema).write \
-        .mode("append").parquet(lineage_path)
+    out.sparkSession.createDataFrame(rows, lineage_schema).coalesce(1) \
+        .write.mode("append").parquet(lineage_path)
 
 
 def _completed(spark: SparkSession, path: str, schema: T.StructType,
                keys: list[str]) -> set[tuple]:
     """Units committed by any previous run. Only a missing table means
     none: taking any other read error as none would redo every unit and
-    append a second lineage row for each."""
-    try:
-        rows = spark.read.schema(schema).parquet(path).select(*keys).collect()
-    except AnalysisException:
+    append a second lineage row for each. The table's existence is asked
+    of the file system, not learnt from a failed read, whose analysis
+    error an observed write's listener logs as a stack trace."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return set()
+    rows = spark.read.schema(schema).parquet(path).select(*keys).collect()
     return {tuple(r) for r in rows}
 
 

@@ -11,6 +11,7 @@ Deterministic re-implementation of:
 from __future__ import annotations
 
 import math
+import sys
 
 import numpy as np
 
@@ -18,6 +19,7 @@ IMAGE_FACTOR = 28
 MIN_PIXELS = 3136
 MAX_PIXELS = 11289600
 MAX_ASPECT_RATIO = 200
+_FLOAT_MAX = sys.float_info.max
 
 #: Paddle-style layout labels → the 11-class dots taxonomy; unknown labels
 #: pass through (layout_service.py:43-57).
@@ -99,14 +101,19 @@ def divide_bbox(bbox, scale_factor: float) -> list[int]:
 
 
 def bbox_is_legal(bbox) -> bool:
-    """F1 — list of 4 numbers with x0 < x1 and y0 < y1.
+    """F1 — list of 4 finite numbers with x0 < x1 and y0 < y1.
+
+    ``abs(v) <= sys.float_info.max`` rejects NaN, ±inf and ints too large
+    for a float in one comparison (``math.isfinite`` raises on those
+    ints); any of them would otherwise raise in a later ``int(float(v))``.
 
     Ref: layout_utils.py:229-233.
     """
     return (
         isinstance(bbox, list)
         and len(bbox) == 4
-        and all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in bbox)
+        and all(isinstance(v, (int, float)) and not isinstance(v, bool)
+                and abs(v) <= _FLOAT_MAX for v in bbox)
         and bbox[0] < bbox[2]
         and bbox[1] < bbox[3]
     )

@@ -30,6 +30,9 @@ abort the Spark task that holds it:
   * a cell whose ``text`` the renderer cannot take — not a string, and
     truthy or on a Formula cell (``"text": 7``) → ``failed``. Falsy
     non-string texts of other cells render as "" and stay ``ok``;
+  * a bbox coordinate that is NaN, ±inf or beyond the float range
+    (``-Infinity``, ``1e400``, ``-10**400``) → ``failed``, wherever it
+    sits: the rescale's ``int(float(v) / scale_factor)`` cannot take it;
   * nesting too deep for ``json.loads`` (100,000 ``[``) → ``fallback``:
     the repair chain treats the ``RecursionError`` as a parse failure;
   * an unparseable payload whose repair salvages a cell with a non-string

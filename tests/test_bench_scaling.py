@@ -1,6 +1,6 @@
 """The scaling headline estimator in tools/bench_scaling.py (pure; no
-Spark): median over clean pairs, contended pairs excluded, max/max only
-as an upper bound."""
+Spark): median over clean pairs, contended pairs (efficiency > 1)
+excluded, max/max only as an upper bound."""
 
 import importlib.util
 import os
@@ -16,10 +16,10 @@ _spec.loader.exec_module(bs)
 LEVELS, DOCS = [4, 16], 1000
 
 
-def _pair(n_dps, xn_dps, healthy=True, levels=LEVELS, docs=DOCS):
+def _pair(n_dps, xn_dps, levels=LEVELS, docs=DOCS):
     return {"N": {"docs_per_sec": n_dps}, "4N": {"docs_per_sec": xn_dps},
             "efficiency": round(xn_dps / n_dps / 4, 3),
-            "probe_healthy": healthy, "levels": levels, "docs": docs}
+            "levels": levels, "docs": docs}
 
 
 @pytest.mark.parametrize("effs, median", [
@@ -36,7 +36,7 @@ def test_headline_is_the_median_clean_pair_not_the_max(effs, median):
 def test_contended_pairs_are_excluded():
     hist = [_pair(1000, 2400),                 # 0.6, clean
             _pair(1000, 3200),                 # 0.8, clean
-            _pair(1000, 3900, healthy=False),  # failed probe
+            _pair(900, 3900),                  # 1.083: N leg depressed
             _pair(500, 2400),                  # 1.2: N leg depressed
             _pair(1000, 2800, docs=DOCS * 2),  # other shape
             _pair(1000, 3600, levels=[2, 8])]  # other shape
@@ -52,7 +52,7 @@ def test_max_max_is_only_an_upper_bound():
     first, 4N from the contended third), so their ratio sits above every
     clean pair and never becomes the headline."""
     hist = [_pair(1000, 2400), _pair(700, 2000),
-            _pair(800, 3000, healthy=False)]
+            _pair(700, 3000)]                  # 1.071: contended
     pick = bs.headline(hist, LEVELS, DOCS)
     ub = pick["upper_bound"]
     assert (ub["N"], ub["4N"]) == (1000, 3000)
@@ -62,7 +62,7 @@ def test_max_max_is_only_an_upper_bound():
 
 
 def test_no_clean_pair_gives_no_headline():
-    hist = [_pair(1000, 3900, healthy=False), _pair(500, 2400)]
+    hist = [_pair(900, 3900), _pair(500, 2400)]
     pick = bs.headline(hist, LEVELS, DOCS)
     assert pick["median"] is None and pick["clean"] == []
     assert bs.headline([], LEVELS, DOCS)["upper_bound"] is None

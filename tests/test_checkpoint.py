@@ -2,6 +2,11 @@
 recomputing completed partitions, and the resumed output equals a
 single-shot run's output exactly."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -68,11 +73,47 @@ def test_resume_skips_completed_buckets(spark, docs, tmp_path, monkeypatch):
     # exactly one lineage row per bucket
     assert lineage.select("bucket").distinct().count() == N_BUCKETS
     assert lineage.count() == N_BUCKETS
+    # one lineage file per commit group (4 buckets each), not one per
+    # default-parallelism slice of the 4 lineage rows
+    lineage_files = [f for f in os.listdir(os.path.join(base, "_lineage"))
+                     if f.endswith(".parquet")]
+    assert len(lineage_files) == N_BUCKETS // 4
 
     # ---- resumed output == single-shot output ---------------------------
     resumed = _spans_fingerprint(checkpoint.read_output(spark, base))
     single = _spans_fingerprint(pipeline.extract(docs))
     assert resumed == single
+
+
+#: two checkpointed runs to fresh bases in one session: the second run's
+#: resume scan of a missing lineage table follows an observed write
+FRESH_BASES_SCRIPT = r"""
+import sys
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4")
+         .getOrCreate())
+from dots_ocr_spark import checkpoint, pipeline
+
+docs = pipeline.generate_input(spark, 20, partitions=2)
+for name in ("a", "b"):
+    checkpoint.run_extraction(spark, docs, f"{sys.argv[1]}/{name}",
+                              n_buckets=4, buckets_per_commit=4)
+spark.stop()
+"""
+
+
+def test_resume_scan_of_a_fresh_base_logs_no_error(tmp_path):
+    """A missing lineage table is looked up, not read and caught: Spark's
+    observation listener logs a failed read's analysis error as an
+    ERROR with a stack trace once the session has run an observed write."""
+    p = subprocess.run([sys.executable, "-c", FRESH_BASES_SCRIPT,
+                        str(tmp_path)], check=True, capture_output=True,
+                       text=True, cwd=Path(__file__).resolve().parents[1])
+    assert "ExecutionListenerBus" not in p.stderr
+    assert "PATH_NOT_FOUND" not in p.stderr
 
 
 def test_rerun_is_noop(spark, docs, tmp_path):

@@ -22,6 +22,28 @@ SALVAGED_LIST_TEXTS = (
     '{"bbox":[1,2,30,41],"category":"Text","text":["b"]},{"bbox":[1,2')
 SALVAGED_DICT_TEXTS = SALVAGED_LIST_TEXTS.replace(
     '["a"]', '{"a":1}').replace('["b"]', '{"b":1}')
+HUGE = "1" + "0" * 400          # 10**400: a JSON int no float can hold
+
+
+def _with_coord(i, literal):
+    """GOOD's payload with bbox coordinate ``i`` replaced by a raw JSON
+    literal (``json.dumps`` cannot write ``1e400`` or ``10**400``'s text)."""
+    bbox = [str(v) for v in BBOX]
+    bbox[i] = literal
+    return GOOD.replace(json.dumps(BBOX), "[" + ", ".join(bbox) + "]")
+
+
+#: coordinates outside the float range. The first three, in x0/y0, raised
+#: ``OverflowError`` from the rescale at scale 2; the last two, in x1/y1,
+#: were clamped to the page and gave ``ok`` (NaN gave ``failed``).
+NON_FINITE_COORDS = {
+    "x0=-Infinity": _with_coord(0, "-Infinity"),
+    "y0=-1e400": _with_coord(1, "-1e400"),
+    "x0=-10**400": _with_coord(0, "-" + HUGE),
+    "x1=Infinity": _with_coord(2, "Infinity"),
+    "y1=1e400": _with_coord(3, "1e400"),
+    "y1=10**400": _with_coord(3, HUGE),
+}
 
 
 def _page(payload):
@@ -65,6 +87,14 @@ def test_salvaged_string_texts_still_fall_back():
     assert r["spans"] == [{"kind": "text", "text": "a\n\nb", "media_ref": None}]
 
 
+@pytest.mark.parametrize("payload", NON_FINITE_COORDS.values(),
+                         ids=NON_FINITE_COORDS.keys())
+def test_non_finite_coordinate_fails_the_page(payload):
+    r = process_page(payload, 1000, 1000, doc_id="d", page_no=0,
+                     scale_factor=2.0)
+    assert r["status"] == "failed" and r["spans"] == []
+
+
 @pytest.mark.parametrize("text", [None, 0, False, [], ""])
 def test_falsy_text_still_renders_empty(text):
     r = _page(json.dumps([{"bbox": BBOX, "category": "Text", "text": text}]))
@@ -74,9 +104,11 @@ def test_falsy_text_still_renders_empty(text):
 @pytest.mark.parametrize("mode", ["fused", "scatter"])
 def test_hostile_pages_do_not_abort_the_job(spark, mode):
     payloads = [GOOD, NON_STRING_CATEGORY, NON_STRING_TEXT, DEEP_NESTING,
-                SALVAGED_INT_TEXT, SALVAGED_LIST_TEXTS, SALVAGED_DICT_TEXTS]
+                SALVAGED_INT_TEXT, SALVAGED_LIST_TEXTS, SALVAGED_DICT_TEXTS,
+                *NON_FINITE_COORDS.values()]
+    # scale 2 runs the rescale that the non-finite coordinates broke
     pages = [{"page_no": i, "width": 1000, "height": 1000,
-              "scale_factor": 1.0, "payload": p, "toc_json": None,
+              "scale_factor": 2.0, "payload": p, "toc_json": None,
               "words_json": None} for i, p in enumerate(payloads)]
     doc = {"doc_id": "hostile", "pages": pages}
     row = ("hostile", [], [tuple(p[f.name] for f in schemas.PAGE.fields)
@@ -84,6 +116,6 @@ def test_hostile_pages_do_not_abort_the_job(spark, mode):
     docs = spark.createDataFrame([row], schemas.INPUT)
     got = pipeline.extract(docs, mode=mode).collect()[0].asDict(recursive=True)
     want = oracle.extract_document(doc)
-    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (7, 5, 1)
+    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (13, 11, 1)
     for key in ("markdown", "markdown_nohf", "n_spans", "status"):
         assert got[key] == want[key], key

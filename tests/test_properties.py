@@ -2,13 +2,16 @@
 oracle and the Spark UDFs run this exact code, so invariants proven here
 hold for the whole engine."""
 
+import copy
 import json
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from dots_ocr_spark.fixtures import generate_docs
 from dots_ocr_spark.spec.cleaner import clean_model_output
 from dots_ocr_spark.spec.geometry import smart_resize
+from dots_ocr_spark.spec.page import process_page
 from dots_ocr_spark.spec.toc import indel_ratio
 from dots_ocr_spark.spec.xycut import reading_order
 
@@ -187,3 +190,96 @@ def test_block_pruned_fill_equals_scalar_clip(words, cells, sf):
         else:
             expected = clip_text(words, [v / sf for v in before["bbox"]])
             assert after["text"] == expected
+
+
+# --------------------------------------------------------------------------
+# process_page: a mutated fixture payload ends in a status, never a raise
+# --------------------------------------------------------------------------
+
+_PAGES = [p for d in generate_docs(12, seed=5) for p in d["pages"]]
+_CELL = {"bbox": [10, 10, 200, 60], "category": "Text", "text": "a"}
+_HUGE = "1" + "0" * 400
+#: raw JSON literals for one bbox coordinate (``json.dumps`` cannot
+#: write ``1e400`` or a 400-digit int for us)
+_COORDS = ["NaN", "Infinity", "-Infinity", "1e400", "-1e400", _HUGE,
+           "-" + _HUGE, "true", "false", '"5"', "null"]
+_VALUES = [None, True, 5, 1.5, "x", "", [], [1], [1, 2, 3, 4], {}, {"a": 1}]
+_NOT_A_LIST = ["5", '"cells"', "null", "true", "{}", '{"cells": []}']
+_MUTATIONS = ["coord", "bbox3", "field", "cell", "surrogate", "nest",
+              "truncate", "not_a_list", "deep_payload"]
+
+
+def _bbox_of(cell):
+    bbox = cell.get("bbox")
+    return list(bbox) if isinstance(bbox, list) and bbox else list(_CELL["bbox"])
+
+
+@st.composite
+def _mutated_payload(draw):
+    """A fixture page's payload text after 1-3 mutations."""
+    page = draw(st.sampled_from(_PAGES))
+    try:
+        cells = json.loads(page["payload"])
+    except ValueError:                  # a fixture page corrupted on purpose
+        cells = None
+    if not isinstance(cells, list) or not cells:
+        cells = [_CELL]
+    cells = copy.deepcopy(cells)
+    raw = {}                            # placeholder -> raw JSON text
+
+    def put(literal):
+        token = f"@@raw{len(raw)}@@"
+        raw[json.dumps(token)] = literal
+        return token
+
+    tail = None
+    for kind in draw(st.lists(st.sampled_from(_MUTATIONS), min_size=1,
+                              max_size=3)):
+        i = draw(st.integers(0, len(cells) - 1))
+        cell = cells[i] if isinstance(cells[i], dict) else dict(_CELL)
+        cells[i] = cell
+        if kind == "coord":
+            bbox = cell["bbox"] = _bbox_of(cell)
+            bbox[draw(st.integers(0, len(bbox) - 1))] = put(
+                draw(st.sampled_from(_COORDS)))
+        elif kind == "bbox3":
+            cell["bbox"] = _bbox_of(cell)[:3]
+        elif kind == "field":
+            cell[draw(st.sampled_from(["bbox", "category", "text"]))] = \
+                copy.deepcopy(draw(st.sampled_from(_VALUES)))
+        elif kind == "cell":
+            cells[i] = copy.deepcopy(draw(st.sampled_from(_VALUES)))
+        elif kind == "surrogate":
+            cell["text"] = str(cell.get("text")) + draw(
+                st.sampled_from(["\ud800", "\udfff", "a\udc00b"]))
+        elif kind == "nest":
+            depth = draw(st.sampled_from([3, 500, 100_000]))
+            cell["text"] = put("[" * depth + "]" * depth)
+        else:
+            tail = kind
+    text = json.dumps(cells, ensure_ascii=draw(st.booleans()))
+    for token, literal in raw.items():
+        text = text.replace(token, literal)
+    if tail == "truncate":
+        text = text[:draw(st.integers(0, max(0, len(text) - 1)))]
+    elif tail == "not_a_list":
+        text = draw(st.sampled_from(_NOT_A_LIST))
+    elif tail == "deep_payload":
+        text = "[" * draw(st.sampled_from([1_000, 100_000])) + text
+    return page, text
+
+
+@given(_mutated_payload(), st.sampled_from([1.0, 2.0, 200.0 / 72.0]),
+       st.sampled_from(["pipeline", "vlm"]))
+@settings(max_examples=400, deadline=None)
+def test_mutated_page_payload_ends_in_a_status(page_and_text, sf, mode):
+    """Inside ``mapInPandas`` a raise aborts the task and then the job, so
+    every hostile payload must come back as a page status."""
+    page, text = page_and_text
+    toc, words = page["toc_json"], page["words_json"]
+    r = process_page(text, page["width"], page["height"], doc_id="d",
+                     page_no=page["page_no"], scale_factor=sf, mode=mode,
+                     toc=None if toc is None else json.loads(toc),
+                     words=None if words is None else json.loads(words))
+    assert r["status"] in {"ok", "fallback", "failed"}
+    json.dumps(r["spans"], allow_nan=False)

@@ -27,8 +27,10 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]")
+        SparkSession.builder
+        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]")
         .appName("ann-recall-bench")
+        .config("spark.driver.memory", "4g")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
