@@ -8,8 +8,7 @@ over tables of interleaved text+media documents.
 Layout:
   spec/        pure-Python/numpy deterministic rules shared by the Spark
                UDFs and unit tests (cleaner, geometry, xycut, textnorm,
-               headers, toc, words, render, page, assemble, winnow, crops,
-               viz).
+               headers, toc, words, render, page, assemble, winnow).
   oracle.py    plain-Python end-to-end per-document reference pipeline
                (golden-test source of truth).
   fixtures.py  seeded deterministic generator for the interleaved input
@@ -24,8 +23,8 @@ Layout:
   dedup.py, similarity.py, textops.py, htmlops.py
                training-data operators (dedup, similarity, text analysis,
                HTML main content).
-  sources/     real-document ingest and rasterization.
-  streaming/   Structured Streaming corpus, near-dedup and session jobs.
+  sources/     real-document ingest.
+  streaming/   Structured Streaming corpus and near-dedup jobs.
   queries.py   the query registry behind `__spark_entry__.py` + DuckDB
                oracle SQL.
 

@@ -2,7 +2,7 @@
 north-rule's "main-content extraction pipeline (HTML boilerplate strip,
 PDF/layout parse, DOM heuristics)".
 
-The reference engine parses rasterized pages; a web-scale training
+The reference engine parses rendered pages; a web-scale training
 pipeline also ingests raw HTML. This module supplies that leg
 Spark-first: a deterministic HTML synthesizer (so the driver's DuckDB
 oracle can predict the extraction output from the RAW text without

@@ -356,7 +356,7 @@ pspans AS (
 
 def q_extract_wordgrain_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4 rescale under the value oracle: the same word-grain input
-    rasterized at scale 2 — cell bboxes and page extent in image space,
+    rendered at scale 2 — cell bboxes and page extent in image space,
     the word layer in PDF space — so the J3 clip only recovers the text
     when the ``bbox / scale_factor`` division runs. The output is
     scale-invariant by construction, hence the SAME oracle SQL as

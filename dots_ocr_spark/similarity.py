@@ -125,9 +125,6 @@ SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-PLANES_PER_TABLE = BITS_PER_TABLE  # back-compat alias
-
-
 def embed_ann_buckets(spark: SparkSession, sf_dir: str,
                       n_tables: int = N_TABLES) -> DataFrame:
     """(vec_id, lsh_table, bucket) — banded sign-LSH: N_TABLES tables of

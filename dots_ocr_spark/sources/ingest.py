@@ -648,7 +648,7 @@ def interleaved_wordgrain(docs: DataFrame, doc_id_col: str = "doc_id",
     every span. The word entries are JSON objects (to_json of structs);
     the spec normalizes them to the positional fitz shape.
 
-    ``scale`` > 1 rasterizes the page at that factor: cell bboxes and the
+    ``scale`` > 1 renders the page at that factor: cell bboxes and the
     page extent are in IMAGE space (multiplied by ``scale``) while the
     word layer stays in PDF space, so the clip only recovers the text if
     the P4 ``bbox / scale_factor`` division runs (ocr_task.py:565) —

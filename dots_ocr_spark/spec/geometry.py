@@ -1,8 +1,6 @@
-"""Bbox & image-size algebra (P1-P5, F1, F5, P9).
+"""Bbox algebra (P4-P5, F1, F5, P9).
 
 Deterministic re-implementation of:
-  - smart_resize       /root/reference/dots_ocr/utils/image_utils.py:32-66
-  - bbox pre/post scale /root/reference/dots_ocr/utils/layout_utils.py:122-204
   - bbox validate/clamp /root/reference/dots_ocr/utils/layout_utils.py:226-239
   - IoU suppression     /root/reference/dots_ocr/model/layout_service.py:59-85
   - category remap      /root/reference/dots_ocr/model/layout_service.py:43-57
@@ -10,15 +8,10 @@ Deterministic re-implementation of:
 
 from __future__ import annotations
 
-import math
 import sys
 
 import numpy as np
 
-IMAGE_FACTOR = 28
-MIN_PIXELS = 3136
-MAX_PIXELS = 11289600
-MAX_ASPECT_RATIO = 200
 _FLOAT_MAX = sys.float_info.max
 
 #: Paddle-style layout labels → the 11-class dots taxonomy; unknown labels
@@ -36,60 +29,6 @@ CATEGORY_REMAP = {
     "table": "Table",
     "figure": "Picture",
 }
-
-
-def round_by_factor(number, factor: int) -> int:
-    return round(number / factor) * factor
-
-
-def ceil_by_factor(number, factor: int) -> int:
-    return math.ceil(number / factor) * factor
-
-
-def floor_by_factor(number, factor: int) -> int:
-    return math.floor(number / factor) * factor
-
-
-def smart_resize(height: int, width: int, factor: int = IMAGE_FACTOR,
-                 min_pixels: int = MIN_PIXELS, max_pixels: int = MAX_PIXELS) -> tuple[int, int]:
-    """P1 — snap (h, w) to multiples of ``factor`` within the pixel budget,
-    preserving aspect ratio; aspect > 200 is rejected.
-
-    Ref: image_utils.py:32-66.
-    """
-    if max(height, width) / min(height, width) > MAX_ASPECT_RATIO:
-        raise ValueError(
-            f"absolute aspect ratio must be smaller than {MAX_ASPECT_RATIO}, "
-            f"got {max(height, width) / min(height, width)}"
-        )
-    h_bar = max(factor, round_by_factor(height, factor))
-    w_bar = max(factor, round_by_factor(width, factor))
-    if h_bar * w_bar > max_pixels:
-        beta = math.sqrt((height * width) / max_pixels)
-        h_bar = max(factor, floor_by_factor(height / beta, factor))
-        w_bar = max(factor, floor_by_factor(width / beta, factor))
-    elif h_bar * w_bar < min_pixels:
-        beta = math.sqrt(min_pixels / (height * width))
-        h_bar = ceil_by_factor(height * beta, factor)
-        w_bar = ceil_by_factor(width * beta, factor)
-        if h_bar * w_bar > max_pixels:
-            beta = math.sqrt((h_bar * w_bar) / max_pixels)
-            h_bar = max(factor, floor_by_factor(h_bar / beta, factor))
-            w_bar = max(factor, floor_by_factor(w_bar / beta, factor))
-    return h_bar, w_bar
-
-
-def scale_bbox(bbox, scale_x: float, scale_y: float) -> list[int]:
-    """P2/P3 — divide coords by per-axis scale, truncating toward zero.
-
-    Ref: layout_utils.py:143-151 and 191-199 (``int(float(v)/scale)``).
-    """
-    return [
-        int(float(bbox[0]) / scale_x),
-        int(float(bbox[1]) / scale_y),
-        int(float(bbox[2]) / scale_x),
-        int(float(bbox[3]) / scale_y),
-    ]
 
 
 def divide_bbox(bbox, scale_factor: float) -> list[int]:

@@ -38,6 +38,10 @@ abort the Spark task that holds it:
   * an unparseable payload whose repair salvages a cell with a non-string
     text (``"text": 7`` then junk; ``["a"]`` or ``{"a": 1}`` before a
     truncated tail) → ``failed``: the degraded page only joins strings.
+  * a lone surrogate (a ``"\\ud800"`` JSON escape) in any string the page
+    emits — ``md``, ``md_nohf``, a span's text or ``media_ref``, wherever
+    it came from (cell text, salvaged fallback text, word layer) →
+    ``failed``: Arrow's UTF-8 string type cannot carry it.
 The first two checks look at the payload as given, so they also fail a page
 whose offending cell a later rule would have dropped (IoU suppression) or
 rewritten (word fill, TOC rebuild).
@@ -91,6 +95,19 @@ def _renderable(cell) -> bool:
     return not text
 
 
+def _failed_page(width, height, scale_factor) -> dict:
+    """The result of a page that ends ``failed``: no cells, no spans."""
+    return {
+        "status": "failed",
+        "cells": [],
+        "width": int(float(width) / scale_factor),
+        "height": int(float(height) / scale_factor),
+        "md": "",
+        "md_nohf": "",
+        "spans": [],
+    }
+
+
 def _validate_cells(cells, width, height):
     """F1 + P5 — reject structurally illegal pages, clamp the legal ones.
 
@@ -130,7 +147,7 @@ def process_page(
     Args:
       payload: VLM-style page payload — JSON string (possibly malformed)
         or an already-parsed cell list.
-      width/height: rasterized page extent (image space).
+      width/height: rendered page extent (image space).
       scale_factor: rasterization scale (dpi/72); output bboxes and page
         extent are divided by it (page_parser.py:184-192).
       toc: this page's TOC entries — None (no TOC), [] (structured doc,
@@ -163,15 +180,7 @@ def process_page(
     # 2. validate + clamp ----------------------------------------------
     validated = _validate_cells(cells, width, height)
     if validated is None:
-        return {
-            "status": "failed",
-            "cells": [],
-            "width": int(float(width) / scale_factor),
-            "height": int(float(height) / scale_factor),
-            "md": "",
-            "md_nohf": "",
-            "spans": [],
-        }
+        return _failed_page(width, height, scale_factor)
     cells = validated
 
     if mode == "pipeline":
@@ -228,6 +237,15 @@ def process_page(
             spans.append(
                 {"kind": category.lower(), "text": text, "media_ref": None}
             )
+
+    # 9. every emitted string must encode as UTF-8 ------------------------
+    try:
+        for v in (md, md_nohf, *(v for sp in spans
+                                 for v in (sp["text"], sp["media_ref"]))):
+            if isinstance(v, str):
+                v.encode("utf-8")
+    except UnicodeEncodeError:
+        return _failed_page(width, height, scale_factor)
 
     return {
         "status": status,

@@ -1,4 +1,4 @@
-"""Text/LaTeX/Markdown normalization rules (T1-T5, T10).
+"""Text/LaTeX/Markdown normalization rules (T1-T4, T10).
 
 Deterministic re-implementation of
 `/root/reference/dots_ocr/utils/format_transformer.py:6-205` and the
@@ -115,23 +115,6 @@ def clean_text(text) -> str:
     if text[:2] == "`$" and text[-2:] == "$`":
         text = text[1:-1]
     return text
-
-
-def fix_streamlit_formulas(md: str) -> str:
-    """T5 — ensure newlines directly inside every ``$$…$$`` block.
-
-    Ref: format_transformer.py:182-205.
-    """
-
-    def _replace(match):
-        content = match.group(1)
-        if content.startswith("\n"):
-            content = content[1:]
-        if content.endswith("\n"):
-            content = content[:-1]
-        return f"$$\n{content}\n$$"
-
-    return re.sub(r"\$\$(.*?)\$\$", _replace, md, flags=re.DOTALL)
 
 
 def collapse_single_newlines(text: str) -> str:

@@ -91,14 +91,6 @@ def _xycut(indices: list[int], boxes, out: list[int]) -> None:
     _xycut([i for i in indices if i != first], boxes, out)
 
 
-def xycut_order(boxes: list) -> list[int]:
-    """Reading-order permutation of ``range(len(boxes))`` by recursive
-    XY-cut. ``boxes`` are [x1, y1, x2, y2]."""
-    out: list[int] = []
-    _xycut(list(range(len(boxes))), boxes, out)
-    return out
-
-
 def reading_order(boxes: list, categories: list | None = None) -> list[int]:
     """Full-page reading order: Page-header cells first (by y1, x1, idx),
     XY-cut over the body, Page-footer cells last (by y1, x1, idx).

@@ -174,7 +174,7 @@ def test_embed_ann_buckets(spark, con):
     rows = _match(spark, con, S.embed_ann_buckets, S.ORACLE_EMBED_ANN_BUCKETS)
     # one row per (vector, table); buckets within each table's bit range
     assert len(rows) == 500 * S.N_TABLES
-    assert all(0 <= b < (1 << S.PLANES_PER_TABLE) for _, _, b in rows)
+    assert all(0 <= b < (1 << S.BITS_PER_TABLE) for _, _, b in rows)
 
 
 def test_embed_neardup(spark, con):

@@ -1,46 +1,12 @@
-"""P1-P5/F1/F5/P9 geometry tests (image_utils.smart_resize truth table,
-bbox algebra, IoU suppression, category remap)."""
+"""P4-P5/F1/F5/P9 geometry tests (bbox algebra, IoU suppression, category
+remap)."""
 
 import math
-
-import pytest
 
 from dots_ocr_spark.spec import geometry as G
 
 
-class TestSmartResize:
-    def test_multiples_of_factor(self):
-        h, w = G.smart_resize(2200, 1700)
-        assert h % 28 == 0 and w % 28 == 0
-
-    def test_truth_table(self):
-        # hand-computed against the reference formula
-        assert G.smart_resize(2200, 1700) == (2212, 1708)
-        assert G.smart_resize(100, 100) == (112, 112)  # upscale to min_pixels
-        assert G.smart_resize(28, 28) == (56, 56)
-        assert G.smart_resize(10000, 10000) == (3360, 3360)  # downscale to max
-
-    def test_min_pixels_respected(self):
-        h, w = G.smart_resize(20, 200)
-        assert h * w >= G.MIN_PIXELS
-
-    def test_max_pixels_respected(self):
-        h, w = G.smart_resize(9000, 7000)
-        assert h * w <= G.MAX_PIXELS
-
-    def test_aspect_ratio_rejected(self):
-        with pytest.raises(ValueError):
-            G.smart_resize(10, 4000)
-
-    def test_aspect_ratio_preserved_roughly(self):
-        h, w = G.smart_resize(2200, 1100)
-        assert abs((h / w) - 2.0) < 0.1
-
-
 class TestBboxAlgebra:
-    def test_scale_bbox_truncates_toward_zero(self):
-        assert G.scale_bbox([10, 20, 30, 41], 3.0, 2.0) == [3, 10, 10, 20]
-
     def test_divide_bbox(self):
         sf = 200.0 / 72.0
         assert G.divide_bbox([278, 556, 834, 1112], sf) == [100, 200, 300, 400]

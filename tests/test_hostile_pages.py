@@ -23,6 +23,16 @@ SALVAGED_LIST_TEXTS = (
 SALVAGED_DICT_TEXTS = SALVAGED_LIST_TEXTS.replace(
     '["a"]', '{"a":1}').replace('["b"]', '{"b":1}')
 HUGE = "1" + "0" * 400          # 10**400: a JSON int no float can hold
+#: a lone-surrogate escape reaching the page's output through each source
+#: of output text: (payload, words_json). At scale 2 the word box lies
+#: inside BBOX / 2.
+LONE_SURROGATE = [
+    (json.dumps([{"bbox": BBOX, "category": "Text", "text": "a\ud800"}]), None),
+    (json.dumps([{"bbox": BBOX, "category": "Picture", "media_ref": "m\udfff"}]),
+     None),
+    ('[{"bbox":[1,2,30,40],"category":"Text","text":"a\\ud800"}] junk', None),
+    (GOOD, json.dumps([[6, 6, 20, 20, "w\ud800", 0, 0, 0]])),
+]
 
 
 def _with_coord(i, literal):
@@ -109,13 +119,14 @@ def test_hostile_pages_do_not_abort_the_job(spark, mode):
     # scale 2 runs the rescale that the non-finite coordinates broke
     pages = [{"page_no": i, "width": 1000, "height": 1000,
               "scale_factor": 2.0, "payload": p, "toc_json": None,
-              "words_json": None} for i, p in enumerate(payloads)]
+              "words_json": w} for i, (p, w) in enumerate(
+                  [(p, None) for p in payloads] + LONE_SURROGATE)]
     doc = {"doc_id": "hostile", "pages": pages}
     row = ("hostile", [], [tuple(p[f.name] for f in schemas.PAGE.fields)
                            for p in pages], len(pages), "small")
     docs = spark.createDataFrame([row], schemas.INPUT)
     got = pipeline.extract(docs, mode=mode).collect()[0].asDict(recursive=True)
     want = oracle.extract_document(doc)
-    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (13, 11, 1)
+    assert (got["n_pages"], got["n_failed"], got["n_fallback"]) == (17, 15, 1)
     for key in ("markdown", "markdown_nohf", "n_spans", "status"):
         assert got[key] == want[key], key

@@ -5,12 +5,14 @@ hold for the whole engine."""
 import copy
 import json
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_type
 
+from dots_ocr_spark import schemas
 from dots_ocr_spark.fixtures import generate_docs
 from dots_ocr_spark.spec.cleaner import clean_model_output
-from dots_ocr_spark.spec.geometry import smart_resize
 from dots_ocr_spark.spec.page import process_page
 from dots_ocr_spark.spec.toc import indel_ratio
 from dots_ocr_spark.spec.xycut import reading_order
@@ -85,20 +87,6 @@ def test_cleaner_fixpoint_on_valid_json(cells):
     once = clean_model_output(json.dumps(cells))
     twice = clean_model_output(json.dumps(once))
     assert once == twice
-
-
-# --------------------------------------------------------------------------
-# smart_resize: contract invariants
-# --------------------------------------------------------------------------
-
-@given(st.integers(28, 4000), st.integers(28, 4000))
-@settings(max_examples=300, deadline=None)
-def test_smart_resize_invariants(h, w):
-    if max(h, w) / min(h, w) > 200:
-        return
-    nh, nw = smart_resize(h, w)
-    assert nh % 28 == 0 and nw % 28 == 0
-    assert 3136 <= nh * nw <= 11289600
 
 
 # --------------------------------------------------------------------------
@@ -269,12 +257,17 @@ def _mutated_payload(draw):
     return page, text
 
 
+_PARSED_ARROW = {f.name: to_arrow_type(f.dataType)
+                 for f in schemas.PARSED_PAGE.fields}
+
+
 @given(_mutated_payload(), st.sampled_from([1.0, 2.0, 200.0 / 72.0]),
        st.sampled_from(["pipeline", "vlm"]))
 @settings(max_examples=400, deadline=None)
 def test_mutated_page_payload_ends_in_a_status(page_and_text, sf, mode):
     """Inside ``mapInPandas`` a raise aborts the task and then the job, so
-    every hostile payload must come back as a page status."""
+    every hostile payload must come back as a page status whose strings
+    cross the UDF's pandas → Arrow conversion."""
     page, text = page_and_text
     toc, words = page["toc_json"], page["words_json"]
     r = process_page(text, page["width"], page["height"], doc_id="d",
@@ -283,3 +276,5 @@ def test_mutated_page_payload_ends_in_a_status(page_and_text, sf, mode):
                      words=None if words is None else json.loads(words))
     assert r["status"] in {"ok", "fallback", "failed"}
     json.dumps(r["spans"], allow_nan=False)
+    for col in ("md", "md_nohf", "spans"):
+        pa.array([r[col]], type=_PARSED_ARROW[col])

@@ -1,4 +1,4 @@
-"""T1-T5/T10 normalization tests (format_transformer.py semantics,
+"""T1-T4/T10 normalization tests (format_transformer.py semantics,
 including branch order of get_formula_in_markdown)."""
 
 from dots_ocr_spark.spec import textnorm as tn
@@ -65,15 +65,6 @@ class TestCleanText:
     def test_empty_and_none(self):
         assert tn.clean_text("") == ""
         assert tn.clean_text(None) == ""
-
-
-class TestFixStreamlitFormulas:
-    def test_adds_newlines(self):
-        assert tn.fix_streamlit_formulas("a $$x$$ b") == "a $$\nx\n$$ b"
-
-    def test_idempotent(self):
-        s = "a $$\nx\n$$ b"
-        assert tn.fix_streamlit_formulas(s) == s
 
 
 class TestCollapseSingleNewlines:

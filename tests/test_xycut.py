@@ -2,7 +2,7 @@
 (FIXTURES.md §2). Expected orders are computed by hand from the geometry,
 NOT by running the algorithm — this is the independent check on XY-cut."""
 
-from dots_ocr_spark.spec.xycut import reading_order, xycut_order
+from dots_ocr_spark.spec.xycut import reading_order
 
 
 def order_of(boxes, cats=None):
@@ -121,4 +121,4 @@ class TestDegenerate:
                 x1 = rng.randint(0, 900)
                 y1 = rng.randint(0, 900)
                 boxes.append([x1, y1, x1 + rng.randint(1, 300), y1 + rng.randint(1, 200)])
-            assert sorted(xycut_order(boxes)) == list(range(n))
+            assert sorted(reading_order(boxes)) == list(range(n))

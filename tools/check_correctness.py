@@ -4,10 +4,13 @@ DuckDB over the same parquet, compare row count + column names +
 order-insensitive values.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+Runs on local[$SPARK_GRAFT_CPUS] (default: the host's CPU count) with a
+4g driver.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -37,12 +40,13 @@ def main():
     only = set(sys.argv[2:])
 
     from pyspark.sql import SparkSession
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
