@@ -238,12 +238,13 @@ def process_page(
                 {"kind": category.lower(), "text": text, "media_ref": None}
             )
 
-    # 9. every emitted string must encode as UTF-8 ------------------------
+    # 9. every emitted string must encode as UTF-8: md_nohf and each span's
+    # text are parts of md, so md and the Picture refs cover them all -----
     try:
-        for v in (md, md_nohf, *(v for sp in spans
-                                 for v in (sp["text"], sp["media_ref"]))):
-            if isinstance(v, str):
-                v.encode("utf-8")
+        md.encode("utf-8")
+        for sp in spans:
+            if isinstance(sp["media_ref"], str):
+                sp["media_ref"].encode("utf-8")
     except UnicodeEncodeError:
         return _failed_page(width, height, scale_factor)
 

@@ -58,4 +58,3 @@ def test_every_top_level_name_has_a_program_reference():
                    if not (f == path and i == lineno)):
             dead.append(f"{path.relative_to(ROOT)}:{lineno} {name}")
     assert not dead, "no program code reaches:\n" + "\n".join(dead)
-
